@@ -8316,7 +8316,7 @@ ORDER BY d.doc_id
 def q_prepare_inference(spark, sf):
     """Direct gate for the §2.2/§2.3 inference operators (round 7): the
     DISTRIBUTED prepare (stackstac_spark/prepare.py — mimetype selection
-    with the bool_and universal quantifier prepare.py:55/reference
+    with the universal quantifier of select_by_mimetype/reference
     prepare.py:86-120; CRS inference; min-resolution inference from
     geotransforms, reference prepare.py:268-333; bounds-overlap asset drop,
     geom_utils.py:66-68; GDAL-tap bounds snapping, geom_utils.py:71-80)

@@ -20,7 +20,7 @@ import math
 import re
 
 import numpy as np
-from pyspark.sql import Column, DataFrame, SparkSession
+from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from stackstac_spark.raster_spec import RasterSpec
@@ -189,23 +189,6 @@ SELECT * FROM (
   )
 ) {where}
 """)
-
-
-def overlap_predicate(
-    a_prefix: str = "", t_prefix: str = "t"
-) -> Column:
-    """Strict bbox-overlap predicate between asset bounds columns
-    (``minx..maxy``) and tile bounds columns (``tminx..tmaxy``) — the
-    plan-time analogue of the reference's runtime windows.intersect check
-    (to_dask.py:183)."""
-    a = lambda c: F.col(f"{a_prefix}{c}")  # noqa: E731
-    t = lambda c: F.col(f"{t_prefix}{c}")  # noqa: E731
-    return (
-        (a("minx") < t("maxx"))
-        & (a("maxx") > t("minx"))
-        & (a("miny") < t("maxy"))
-        & (a("maxy") > t("miny"))
-    )
 
 
 def join_assets_to_tiles(asset_table: DataFrame, tiles: DataFrame) -> DataFrame:

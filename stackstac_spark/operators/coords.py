@@ -101,13 +101,3 @@ def xy_label_tables(
     )
     return xs, ys
 
-
-def to_attrs(spec: RasterSpec) -> dict:
-    """prepare.py:565-573: the stack-level attrs."""
-    xres, yres = spec.resolutions_xy
-    return {
-        "spec": spec,
-        "crs": f"epsg:{spec.epsg}",
-        "transform": spec.transform,
-        "resolution": xres if xres == yres else (xres, yres),
-    }

@@ -9,11 +9,11 @@ pixel window and all offsets are rebased so the result is a self-contained
 stack whose spec IS the cropped grid — what a user exporting or serving an
 AOI expects.
 
-Scale shape: one plan-time range filter (same predicate slice_bounds pushes
-down) + a MAP-ONLY Arrow kernel that slices boundary tile payloads; no
-shuffle, no join — interior tiles pass through with only an offset rebase
-(the payload bytes are untouched, so the kernel is O(boundary) work on an
-O(AOI) input).
+Scale shape: one plan-time range filter (``tiles_in_window``, the
+predicate slice_bounds pushes down) + a MAP-ONLY Arrow kernel that slices
+boundary tile payloads; no shuffle, no join — interior tiles pass through
+with only an offset rebase (the payload bytes are untouched, so the kernel
+is O(boundary) work on an O(AOI) input).
 """
 
 from __future__ import annotations
@@ -25,8 +25,22 @@ import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from stackstac_spark.raster_spec import RasterSpec
+from stackstac_spark.raster_spec import RasterSpec, Window
 from stackstac_spark.sources.raster import TILE_SCHEMA
+
+
+def tiles_in_window(tiles: DataFrame, win: Window) -> DataFrame:
+    """The tiles overlapping the pixel window ``win`` — a plan-time range
+    filter on the tile offsets (a window reaching past the raster edge keeps
+    the same tiles as its clamped form, since every tile lies inside)."""
+    r1 = win.row_off + win.height
+    c1 = win.col_off + win.width
+    return tiles.filter(
+        (F.col("row_off") < r1)
+        & (F.col("row_off") + F.col("tile_h") > win.row_off)
+        & (F.col("col_off") < c1)
+        & (F.col("col_off") + F.col("tile_w") > win.col_off)
+    )
 
 
 def crop_tiles(
@@ -66,12 +80,7 @@ def crop_tiles(
     )
 
     # plan-time prune: only tiles overlapping the window reach the kernel
-    kept = tiles.filter(
-        (F.col("row_off") < r1)
-        & (F.col("row_off") + F.col("tile_h") > r0)
-        & (F.col("col_off") < c1)
-        & (F.col("col_off") + F.col("tile_w") > c0)
-    )
+    kept = tiles_in_window(tiles, win)
 
     def kernel(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in batches:

@@ -430,7 +430,10 @@ def edit_distance_pairs(
         )
         .withColumn("__x", F.explode("__ids_a"))
         .withColumn("__y", F.explode("__ids_b"))
-        .filter((F.col(sa) < F.col(sb)) | (F.col("__x") < F.col("__y")))
+        .filter(
+            ((F.col(sa) < F.col(sb)) & (F.col("__x") != F.col("__y")))
+            | (F.col("__x") < F.col("__y"))
+        )
     )
     # id_a is the smaller id; its NAME must stay attached to it (the old
     # pair stream carried name(id_a), not min(name)) — swap names back
@@ -858,7 +861,10 @@ def jaro_winkler_pairs(
         scored.select(sa_n, sb_n, *block_cols, "__ids_a", "__ids_b", "jw")
         .withColumn("__x", F.explode("__ids_a"))
         .withColumn("__y", F.explode("__ids_b"))
-        .filter((F.col(sa_n) < F.col(sb_n)) | (F.col("__x") < F.col("__y")))
+        .filter(
+            ((F.col(sa_n) < F.col(sb_n)) & (F.col("__x") != F.col("__y")))
+            | (F.col("__x") < F.col("__y"))
+        )
     )
     # keep name(id_a) attached to id_a, as the old pair stream did
     swap = (F.col(sa_n) < F.col(sb_n)) & (F.col("__x") > F.col("__y"))

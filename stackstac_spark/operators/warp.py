@@ -141,7 +141,7 @@ def _bounds_9pt_udf(out_epsg: int):
     3x3 boundary-point sampling (corners + edge midpoints + center).
 
     The warp-footprint variant of prepare's 4-corner
-    ``_bounds_to_out_epsg_udf``: mid-edge samples capture graticule
+    ``with_out_bounds`` kernel: mid-edge samples capture graticule
     curvature extrema (a tile straddling a UTM central meridian has its
     max northing mid-edge, not at a corner), so the source footprint
     covers what ``_interp_tile`` will actually gather. prepare keeps the
@@ -213,8 +213,8 @@ def _dst_tiles_driver(
     dc0 = dtx * chunksize
     th = np.minimum(chunksize, dh - dr0)
     tw = np.minimum(chunksize, dw - dc0)
-    # dst tile bounds → src CRS via the same 4-corner min/max the
-    # _bounds_to_out_epsg_udf kernel uses
+    # dst tile bounds → src CRS via the same 4-corner min/max prepare's
+    # with_out_bounds kernel uses
     bminx = dminx + dc0 * dxres
     bminy = dmaxy - (dr0 + th) * dyres
     bmaxx = dminx + (dc0 + tw) * dxres

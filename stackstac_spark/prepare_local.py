@@ -1,67 +1,47 @@
-"""Driver-side prepare fast path for SMALL item lists.
+"""Driver-side prepare for SMALL item lists: zero Spark jobs.
 
-The distributed ``prepare`` (prepare.py) expresses metadata inference as
-DataFrame aggregates so a billion-item catalog never materializes on the
-driver. The cost is ~6 small Spark jobs of fixed overhead — seconds of
-latency to plan a 13-item stack the reference plans in ~117 ms
-(BASELINE.md, docs/basic.ipynb cell 7). For interactive use with a
-driver-side item LIST, that overhead buys nothing: the metadata is already
-in driver memory.
+The distributed ``prepare`` (prepare.py) keeps item sort, asset selection
+and the asset ⋈ item joins relational so a billion-item catalog never
+materializes on the driver. The cost is a few small Spark jobs of fixed
+overhead — seconds of latency to plan a 13-item stack the reference plans
+in ~117 ms (BASELINE.md, docs/basic.ipynb cell 7). For interactive use with
+a driver-side item LIST, that overhead buys nothing: the metadata is
+already in driver memory.
 
-``prepare_local`` runs the IDENTICAL inference in numpy — same
-normalization kernel (``sources.stac._item_to_rows``), same helpers
-(Mimetype, ``reproject_bounds``, ``transform_xy``, ``snapped_bounds``),
-same priority chains, guards, and error messages as prepare.py — and
-returns the same ``Prepared`` (the asset/items/band_fields tables become
-small local DataFrames; everything downstream, including the scan, is
-unchanged and still distributed). ``stack()`` routes here automatically
-for lists up to ``LOCAL_PREPARE_MAX`` items; the property test
-``tests/test_prepare_local_parity.py`` asserts both paths produce
-identical Prepared outputs across randomized catalogs.
+``prepare_local`` builds the same effective asset rows in pandas (same
+normalization kernel, ``sources.stac._item_to_rows``) and runs the SAME
+inference kernel as prepare.py once, on the driver. It returns the same
+``Prepared`` (the asset/items/band_fields tables become small local
+DataFrames; everything downstream, including the scan, is unchanged and
+still distributed). ``stack()`` routes here automatically for lists up to
+``LOCAL_PREPARE_MAX`` items.
 """
 
 from __future__ import annotations
 
-import warnings
-
 import numpy as np
+import pandas as pd
 
-from stackstac_spark.functions.proj import reproject_bounds, transform_xy
-from stackstac_spark.prepare import Mimetype, Prepared
-from stackstac_spark.raster_spec import Bbox, RasterSpec, snapped_bounds
+from stackstac_spark.functions.proj import reproject_bounds
+from stackstac_spark.prepare import (
+    PROJ_FIELDS,
+    Prepared,
+    common_epsg,
+    explicit_asset_ids,
+    finish,
+    select_by_mimetype,
+    summarize,
+    with_out_bounds,
+)
+from stackstac_spark.raster_spec import Bbox, bounds_overlap
 from stackstac_spark.sources.stac import ASSET_SCHEMA, ITEM_SCHEMA, _item_to_rows
 
 #: stack() uses the driver path for item lists up to this size. Above it the
 #: metadata plausibly matters at cluster scale — use the DataFrame path.
 LOCAL_PREPARE_MAX = 1000
 
-# column positions in _item_to_rows outputs
+# column positions in _item_to_rows' item rows
 _I = {f.name: i for i, f in enumerate(ITEM_SCHEMA.fields)}
-_A = {f.name: i for i, f in enumerate(ASSET_SCHEMA.fields)}
-
-
-def _affine_bounds(shape, trans) -> list[float] | None:
-    """4-corner bounds of shape×transform — the full-affine math from
-    prepare.py:320-335 (rotation terms participate)."""
-    if shape is None or trans is None:
-        return None
-    a, b, c, d, e, f = (float(v) for v in trans[:6])
-    h, w = float(shape[0]), float(shape[1])
-    xs = (c, c + a * w, c + b * h, c + a * w + b * h)
-    ys = (f, f + d * w, f + e * h, f + d * w + e * h)
-    return [min(xs), min(ys), max(xs), max(ys)]
-
-
-def _pixel_res(trans, src_epsg: int, out_epsg: int) -> tuple[float, float]:
-    """1-px box extent in out-CRS units — the _pixel_res_udf math
-    (prepare.py:133-169): corners (col,row) = (0,0),(0,1),(1,1),(1,0)."""
-    a, b, c, d, e, f = (float(v) for v in trans[:6])
-    corners = [(0.0, 0.0), (0.0, 1.0), (1.0, 1.0), (1.0, 0.0)]
-    xs = np.array([col * a + row * b + c for col, row in corners])
-    ys = np.array([col * d + row * e + f for col, row in corners])
-    if int(src_epsg) != out_epsg:
-        xs, ys = transform_xy(int(src_epsg), out_epsg, xs, ys)
-    return float(xs.max() - xs.min()), float(ys.max() - ys.min())
 
 
 def prepare_local(
@@ -80,279 +60,95 @@ def prepare_local(
     if bounds is not None and bounds_latlon is not None:
         raise ValueError("Cannot give both bounds and bounds_latlon")
 
+    from pyspark.sql import types as T
+
     from stackstac_spark.session import local_df
 
     rows = [_item_to_rows(it) for it in items]
     item_rows = [r[0] for r in rows]
-    asset_rows = [a for r in rows for a in r[1]]
+    assets_pdf = pd.DataFrame(
+        [a for r in rows for a in r[1]], columns=ASSET_SCHEMA.fieldNames()
+    )
 
-    # 1. sort items, assign item_idx (missing datetime sorts as "")
-    if sortby_date == "desc":
-        # Spark sorts (datetime DESC, item_id ASC): two stable passes
-        keyed = sorted(item_rows, key=lambda r: r[_I["item_id"]] or "")
-        keyed = sorted(keyed, key=lambda r: r[_I["datetime"]] or "", reverse=True)
-    elif sortby_date not in (None, False):
-        keyed = sorted(
-            item_rows,
-            key=lambda r: (r[_I["datetime"]] or "", r[_I["item_id"]] or ""),
-        )
-    else:
-        keyed = sorted(item_rows, key=lambda r: r[_I["item_id"]] or "")
-    # id → ALL indices carrying it: duplicate item ids fan out exactly like
-    # the distributed path's assets⋈items equi-join on item_id
-    item_idxs: dict[str, list[int]] = {}
-    for i, r in enumerate(keyed):
-        item_idxs.setdefault(r[_I["item_id"]], []).append(i)
+    # 1. sort items, assign item_idx (missing datetime sorts as ""): Spark
+    #    sorts (datetime ASC|DESC, item_id ASC) — two stable passes
+    keyed = sorted(item_rows, key=lambda r: r[_I["item_id"]] or "")
+    if sortby_date not in (None, False):
+        keyed.sort(key=lambda r: r[_I["datetime"]] or "", reverse=sortby_date == "desc")
 
-    # 2. asset-id selection (select_asset_ids semantics, prepare.py:93-125)
+    # 2. asset-id selection (the rules of prepare step 2)
     if isinstance(assets, (list, tuple)):
-        asset_ids = list(assets)
-        present = {a[_A["asset_id"]] for a in asset_rows}
-        unknown = [a for a in asset_ids if a not in present]
-        if unknown:
-            asset_ids = [a for a in asset_ids if a in present]
-            if not asset_ids:
-                raise ValueError(
-                    f"Asset ids {unknown} not found on any item; available: {sorted(present)}"
-                )
-            warnings.warn(
-                f"Dropping asset ids not present on any item: {unknown}", stacklevel=3
-            )
+        asset_ids = explicit_asset_ids(assets, set(assets_pdf["asset_id"]))
     elif isinstance(assets, str):
-        mt = Mimetype.from_str(assets)
-        all_match: dict[str, bool] = {}
-        for a in asset_rows:
-            aid, typ = a[_A["asset_id"]], a[_A["type"]]
-            ok = mt.matches(typ) if typ is not None else False
-            all_match[aid] = all_match.get(aid, True) and ok
-        asset_ids = sorted(aid for aid, ok in all_match.items() if ok)
+        asset_ids = select_by_mimetype(zip(assets_pdf["asset_id"], assets_pdf["type"]), assets)
     else:
         per_item: dict[str, list[str]] = {}
-        for a in asset_rows:
-            per_item.setdefault(a[_A["item_id"]], []).append(a[_A["asset_id"]])
+        for item_id, asset_id in zip(assets_pdf["item_id"], assets_pdf["asset_id"]):
+            per_item.setdefault(item_id, []).append(asset_id)
         best = sorted(per_item.items(), key=lambda kv: (-len(kv[1]), kv[0]))
         asset_ids = list(dict.fromkeys(best[0][1])) if best else []
     if not asset_ids:
         raise ValueError("No assets selected")
-    # id → ALL band positions (a duplicated explicit asset id fans out into
-    # one band per occurrence, matching the band_idx_df equi-join)
-    band_idxs: dict[str, list[int]] = {}
-    for i, a in enumerate(asset_ids):
-        band_idxs.setdefault(a, []).append(i)
 
-    # 3. effective per-asset metadata (asset field falls back to item level);
-    #    the double loop IS the assets ⋈ band_idx_df ⋈ items_idx join of the
-    #    distributed path, so duplicate ids produce the same fan-out
-    sel = []
-    for a in asset_rows:
-        if a[_A["asset_id"]] not in band_idxs:
-            continue
-        for ii in item_idxs[a[_A["item_id"]]]:
-            it = keyed[ii]
-            for bi in band_idxs[a[_A["asset_id"]]]:
-                sel.append(
-                    {
-                        "item_idx": ii,
-                        "band_idx": bi,
-                        "item_id": a[_A["item_id"]],
-                        "asset_id": a[_A["asset_id"]],
-                        "href": a[_A["href"]],
-                        "epsg": a[_A["proj_epsg"]] if a[_A["proj_epsg"]] is not None else it[_I["proj_epsg"]],
-                        "bbox": a[_A["proj_bbox"]] if a[_A["proj_bbox"]] is not None else it[_I["proj_bbox"]],
-                        "shape": a[_A["proj_shape"]] if a[_A["proj_shape"]] is not None else it[_I["proj_shape"]],
-                        "trans": a[_A["proj_transform"]] if a[_A["proj_transform"]] is not None else it[_I["proj_transform"]],
-                        "i_bbox": it[_I["bbox"]],
-                        "scale": 1.0 if not rescale else a[_A["scale"]],
-                        "offset": 0.0 if not rescale else a[_A["offset"]],
-                    }
-                )
+    # 3. effective asset rows: the assets ⋈ bands ⋈ items inner joins of the
+    #    distributed path (duplicate ids fan out the same way; null item ids
+    #    join nothing — pandas would match null keys to each other), each
+    #    proj field falling back to the item's
+    bands = pd.DataFrame({"asset_id": asset_ids, "band_idx": range(len(asset_ids))})
+    item_side = pd.DataFrame(
+        [(i, r[_I["item_id"]], r[_I["bbox"]], *(r[_I[c]] for c in PROJ_FIELDS)) for i, r in enumerate(keyed)],
+        columns=["item_idx", "item_id", "i_bbox", *(f"i_{c}" for c in PROJ_FIELDS)],
+    )
+    banded = assets_pdf.merge(bands, on="asset_id")
+    at = banded.merge(item_side.dropna(subset=["item_id"]), on="item_id")
+    for c in PROJ_FIELDS:
+        own = at[c].to_numpy()
+        at[c] = np.where(pd.notna(own), own, at[f"i_{c}"].to_numpy())
+    if not rescale:
+        at["scale"], at["offset"] = 1.0, 0.0
 
-    # 4. output CRS (prepare.py:187-206 semantics)
-    if epsg is None:
-        codes = {s["epsg"] for s in sel if s["epsg"] is not None}
-        if len(codes) != 1:
-            raise ValueError(
-                f"Cannot pick a common CRS: assets have EPSG codes {sorted(codes)}; "
-                "pass epsg= explicitly"
-            )
-        out_epsg = int(next(iter(codes)))
-    else:
-        out_epsg = int(epsg)
-
+    # 4. output CRS, then the inference kernel in one pass
+    out_epsg = int(epsg) if epsg is not None else common_epsg(at["proj_epsg"])
     if bounds_latlon is not None:
         bounds = reproject_bounds(bounds_latlon, 4326, out_epsg)
+    at = with_out_bounds(at, out_epsg)
+    spec = finish(
+        summarize(at, out_epsg, resolution is None),
+        out_epsg,
+        resolution,
+        bounds,
+        snap_bounds,
+        rescale,
+        dtype,
+    )
+    if bounds is not None:
+        at = at[np.array([bounds_overlap(ob, bounds) for ob in at["out_bounds"]], dtype=bool)]
 
-    # 5. out-CRS bounds, priority chain + guards (one python pass instead of
-    #    the one-aggregate Spark job — same branches, same error strings)
-    bad_scale = no_geom = non_rect = no_res = None
-
-    def _wit(cur, s):
-        # Spark picks F.max(struct(asset_id, item_id)) — the lexicographic
-        # MAX witness — so error messages match the distributed path exactly
-        if cur is None or (s["asset_id"], s["item_id"]) > (cur["asset_id"], cur["item_id"]):
-            return s
-        return cur
-    rescale_witness = None
-    same_r = []
-    cross_r = []
-    shape_r = []
-    union = [np.inf, np.inf, -np.inf, -np.inf]
-    for s in sel:
-        if isinstance(s["scale"], float) and np.isnan(s["scale"]):
-            bad_scale = _wit(bad_scale, s)
-        native = s["bbox"] if s["bbox"] is not None else _affine_bounds(s["shape"], s["trans"])
-        if native is not None and s["epsg"] is not None:
-            ob = list(reproject_bounds(tuple(native), int(s["epsg"]), out_epsg))
-        elif s["i_bbox"] is not None:
-            ob = list(reproject_bounds(tuple(s["i_bbox"]), 4326, out_epsg))
-        else:
-            no_geom = _wit(no_geom, s)
-            ob = None
-        s["out_bounds"] = ob
-        if (s["scale"] != 1.0 or s["offset"] != 0.0) and not (
-            isinstance(s["scale"], float) and np.isnan(s["scale"])
-        ):
-            w = (s["scale"], s["offset"])
-            if rescale_witness is None or w > rescale_witness:
-                rescale_witness = w
-        has_trans = s["trans"] is not None and s["epsg"] is not None
-        if has_trans and int(s["epsg"]) == out_epsg:
-            if float(s["trans"][1]) != 0.0 or float(s["trans"][3]) != 0.0:
-                non_rect = _wit(non_rect, s)
-            else:
-                same_r.append((abs(float(s["trans"][0])), abs(float(s["trans"][4]))))
-        elif has_trans:
-            if resolution is None:
-                cross_r.append(_pixel_res(s["trans"], int(s["epsg"]), out_epsg))
-        else:
-            if s["shape"] is not None and ob is not None:
-                shape_r.append(
-                    (
-                        (ob[2] - ob[0]) / float(s["shape"][1]),
-                        (ob[3] - ob[1]) / float(s["shape"][0]),
-                    )
-                )
-            else:
-                no_res = _wit(no_res, s)
-        if ob is not None:
-            union = [
-                min(union[0], ob[0]),
-                min(union[1], ob[1]),
-                max(union[2], ob[2]),
-                max(union[3], ob[3]),
-            ]
-
-    if bad_scale is not None:
-        raise ValueError(
-            f"Assets with multi-band raster:bands are unsupported (asset "
-            f"{bad_scale['asset_id']!r} on item {bad_scale['item_id']!r})"
-        )
-    if no_geom is not None:
-        raise ValueError(
-            f"No geometry information (proj:bbox / proj:shape+transform / bbox) "
-            f"for asset {no_geom['asset_id']!r} of item {no_geom['item_id']!r}"
-        )
-    if rescale and not np.issubdtype(np.dtype(dtype), np.floating) and rescale_witness:
-        sc, of = rescale_witness
-        if not (
-            np.can_cast(np.min_scalar_type(sc), dtype)
-            and np.can_cast(np.min_scalar_type(of), dtype)
-        ):
-            raise ValueError(
-                f"scale/offset ({sc}, {of}) can't be cast to output dtype {dtype}"
-            )
-
-    # 6. resolution (prepare.py:452-483 branches)
-    if resolution is not None:
-        res_xy = (
-            (float(resolution), float(resolution))
-            if np.isscalar(resolution)
-            else (float(resolution[0]), float(resolution[1]))
-        )
-    else:
-        if non_rect is not None:
-            raise NotImplementedError(
-                f"Cannot automatically compute the resolution: asset "
-                f"{non_rect['asset_id']!r} on item {non_rect['item_id']!r} has a "
-                "non-rectilinear geotrans (its data is not axis-aligned). "
-                "Please specify the `resolution=` argument."
-            )
-        if no_res is not None:
-            raise ValueError(
-                f"Cannot automatically compute the resolution: asset "
-                f"{no_res['asset_id']!r} on item {no_res['item_id']!r} provides "
-                "neither proj:transform+proj:epsg nor proj:shape. "
-                "Please specify the `resolution=` argument."
-            )
-        cand = []
-        for group in (same_r, cross_r, shape_r):
-            if group:
-                cand.append((min(g[0] for g in group), min(g[1] for g in group)))
-        if not cand:
-            raise ValueError("Cannot infer resolution; pass resolution=")
-        res_xy = (min(c[0] for c in cand), min(c[1] for c in cand))
-
-    # 7. bounds + out-of-bounds drop + snapping
-    if bounds is None:
-        out_bounds: Bbox = tuple(union)  # type: ignore[assignment]
-    else:
-        out_bounds = bounds
-        bminx, bminy, bmaxx, bmaxy = bounds
-        sel = [
-            s
-            for s in sel
-            if s["out_bounds"][0] < bmaxx
-            and s["out_bounds"][2] > bminx
-            and s["out_bounds"][1] < bmaxy
-            and s["out_bounds"][3] > bminy
-        ]
-    if snap_bounds:
-        out_bounds = snapped_bounds(out_bounds, res_xy)
-    spec = RasterSpec(out_epsg, out_bounds, res_xy)
-
-    # 8. final tables as local DataFrames (identical schemas to prepare.py)
+    # 5. final tables as local DataFrames (identical schemas to prepare.py)
     asset_table = local_df(
         spark,
-        [
-            (
-                s["item_idx"],
-                s["band_idx"],
-                s["asset_id"],
-                s["href"],
-                [float(v) for v in s["out_bounds"]],
-                float(s["scale"]),
-                float(s["offset"]),
-            )
-            for s in sel
-        ],
+        list(
+            at[["item_idx", "band_idx", "asset_id", "href", "out_bounds", "scale", "offset"]]
+            .itertuples(index=False, name=None)
+        ),
         "item_idx INT, band_idx INT, asset_id STRING, url STRING, "
         "bounds ARRAY<DOUBLE>, scale DOUBLE, offset DOUBLE",
     )
-    surviving = {s["item_idx"] for s in sel}
-    from pyspark.sql import types as T
-
+    surviving = set(at["item_idx"])
     items_schema = T.StructType(
         [T.StructField("item_idx", T.IntegerType())] + list(ITEM_SCHEMA.fields)
     )
     items_out = local_df(
         spark,
-        [
-            (i, *r)
-            for i, r in enumerate(keyed)
-            if i in surviving
-        ],
+        [(i, *r) for i, r in enumerate(keyed) if i in surviving],
         items_schema,
     )
-    # band-level constant fields (same rule as prepare.py:515-521: value
-    # identical on every asset row carrying the key)
+    # band-level constant fields (same rule as prepare.py: value identical on
+    # every asset row carrying the key)
     fields_acc: dict[tuple[int, str, str], set] = {}
-    for a in asset_rows:
-        aid = a[_A["asset_id"]]
-        if aid not in band_idxs:
-            continue
-        for k, v in (a[_A["fields"]] or {}).items():
-            for bi in band_idxs[aid]:
-                fields_acc.setdefault((bi, aid, k), set()).add(v)
+    for bi, aid, fields in zip(banded["band_idx"], banded["asset_id"], banded["fields"]):
+        for k, v in (fields or {}).items():
+            fields_acc.setdefault((bi, aid, k), set()).add(v)
     band_fields = local_df(
         spark,
         [

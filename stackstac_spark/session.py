@@ -88,11 +88,6 @@ def get_spark(
     return builder.getOrCreate()
 
 
-def load_tables(spark: SparkSession, sf_dir: str, names: tuple[str, ...]) -> dict:
-    """Read the given parquet tables from ``sf_dir`` as DataFrames."""
-    return {n: spark.read.parquet(f"{sf_dir}/{n}.parquet") for n in names}
-
-
 def local_df(spark: SparkSession, rows, schema):
     """Driver-side rows → DataFrame as a JVM LocalRelation, not a Python RDD.
 

@@ -28,6 +28,7 @@ paths or over http(s) via :class:`HttpRangeFile`, which reproduces GDAL's
 
 from __future__ import annotations
 
+import os
 import re
 import struct
 import zlib
@@ -400,7 +401,14 @@ class MiniTiffDataset:
         :meth:`overview` navigate the chain."""
         self.path = path
         self.ifd_index = ifd_index
-        self._fh = HttpRangeFile(path) if _HTTP_RE.match(path) else open(path, "rb")
+        # a local read(n) allocates n bytes up front, so the file size bounds
+        # every length read from a local file: a corrupt count must fail as
+        # TiffError, not as a MemoryError (a ranged HTTP read returns short)
+        if _HTTP_RE.match(path):
+            self._fh, self._end = HttpRangeFile(path), float("inf")
+        else:
+            self._fh = open(path, "rb")
+            self._end = os.fstat(self._fh.fileno()).st_size
         try:
             self._parse()
         except Exception:
@@ -512,6 +520,8 @@ class MiniTiffDataset:
         if self.tiled:
             self._chunk_w = int(self._scalar(_T_TILE_W))
             self._chunk_h = int(self._scalar(_T_TILE_H))
+            if self._chunk_w <= 0 or self._chunk_h <= 0:
+                raise TiffError(f"{self.path}: empty tile size")
             self._offsets = [int(v) for v in self._values(_T_TILE_OFFSETS)]
             self._counts = [int(v) for v in self._values(_T_TILE_COUNTS)]
             self._across = -(-self.width // self._chunk_w)
@@ -521,6 +531,8 @@ class MiniTiffDataset:
                 raise TiffError(f"{self.path}: neither tile nor strip offsets present")
             self._chunk_w = self.width
             self._chunk_h = int(self._scalar(_T_ROWS_PER_STRIP, default=self.height))
+            if self._chunk_h <= 0:
+                raise TiffError(f"{self.path}: empty strip size")
             self._offsets = [int(v) for v in self._values(_T_STRIP_OFFSETS)]
             self._counts = [int(v) for v in self._values(_T_STRIP_COUNTS)]
             self._across = 1
@@ -548,6 +560,8 @@ class MiniTiffDataset:
         typ, cnt, field = ent
         if typ not in _TYPES:
             raise TiffError(f"{self.path}: tag {tag} has unknown type {typ}")
+        if cnt == 0 and typ != 2:  # callers index the first value
+            raise TiffError(f"{self.path}: tag {tag} has no values")
         ch, size = _TYPES[typ]
         total = size * cnt  # _TYPES size already covers a rational's pair
         if total <= len(field):  # inline: 4 bytes classic, 8 BigTIFF
@@ -555,7 +569,7 @@ class MiniTiffDataset:
         else:
             (off,) = struct.unpack(self._e + ("Q" if self._big else "I"), field)
             self._fh.seek(off)
-            buf = self._fh.read(total)
+            buf = self._fh.read(total) if off + total <= self._end else b""
             if len(buf) < total:
                 raise TiffError(f"{self.path}: tag {tag} data truncated")
         if typ == 2:
@@ -640,8 +654,10 @@ class MiniTiffDataset:
         off, cnt = self._offsets[idx], self._counts[idx]
         global DECODE_BYTES
         DECODE_BYTES += cnt
-        self._fh.seek(off)
-        buf = self._fh.read(cnt)
+        buf = b""
+        if 0 <= off <= self._end - cnt:
+            self._fh.seek(off)
+            buf = self._fh.read(cnt)
         if len(buf) < cnt:
             raise TiffError(f"{self.path}: chunk {idx} truncated on disk")
         if self._compression in (8, 32946):

@@ -278,18 +278,14 @@ class RasterStack:
         return replace(self, tiles=tiles, spec=spec)
 
     def slice_bounds(self, bounds: Bbox) -> "RasterStack":
-        """Spatial slice: prune whole tiles by a range predicate (partition-
-        prunable at plan time), then rely on per-pixel ops to clip."""
-        minx, miny, maxx, maxy = bounds
-        t = self.tiles.filter(
-            (F.col("tminx") < maxx)
-            & (F.col("tmaxx") > minx)
-            & (F.col("tminy") < maxy)
-            & (F.col("tmaxy") > miny)
-            if "tminx" in self.tiles.columns
-            else F.lit(True)
-        )
-        return replace(self, tiles=t)
+        """Spatial slice: keep only the whole tiles overlapping ``bounds``
+        (in the spec's CRS) — a plan-time range filter on the tile offsets.
+        The spec is unchanged and kept tiles keep their pixels outside
+        ``bounds``; use :meth:`crop` for the pixel-true cut."""
+        from stackstac_spark.operators.crop import tiles_in_window
+
+        win = self.spec.pixel_window_from_bounds(bounds)
+        return replace(self, tiles=tiles_in_window(self.tiles, win))
 
     # --- compute --------------------------------------------------------
 
@@ -435,10 +431,10 @@ def stack(
 
         plain = items_to_plain(items)
         if len(plain) <= LOCAL_PREPARE_MAX:
-            # small driver-side catalogs: identical inference in numpy, zero
-            # Spark jobs during planning (parity-tested vs prepare.py in
-            # tests/test_prepare_local_parity.py) — the reference plans a
-            # 13-item stack in ~117 ms (BASELINE.md) and so should we
+            # small driver-side catalogs: the same inference kernel as
+            # prepare(), run once on the driver with zero Spark jobs during
+            # planning — the reference plans a 13-item stack in ~117 ms
+            # (BASELINE.md) and so should we
             prepared = prepare_local(
                 spark,
                 plain,

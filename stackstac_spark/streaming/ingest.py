@@ -384,9 +384,9 @@ def incremental_stack_sink(
             # A micro-batch of SCENES is catalog metadata — KBs per item,
             # tens to thousands of items per trigger — so prepare it with
             # the ZERO-job driver fastpath batch stack() uses for small
-            # catalogs (prepare_local, parity-locked to prepare). The old
-            # distributed prepare here cost ~6 driver jobs per micro-batch,
-            # each re-executing the streaming-lineage parse.
+            # catalogs (prepare_local: prepare's inference kernel run on
+            # the driver). The distributed prepare here cost ~6 driver jobs
+            # per micro-batch, each re-executing the streaming-lineage parse.
             rows = [r.value for r in head if r.value and r.value.strip()]
             if not rows:
                 return

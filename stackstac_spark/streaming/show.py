@@ -129,12 +129,6 @@ def compute_tile(layer: Layer, z: int, x: int, y: int, tilesize: int = 256) -> b
     return png
 
 
-def cancel_layer(spark, token: str) -> None:
-    """Cancel in-flight tile jobs for a layer (the speculative-tile
-    cancellation path, show.py:242-257 → sc.cancelJobGroup)."""
-    spark.sparkContext.cancelJobGroup(f"tile-{token}")
-
-
 _PREFETCH_POOL: "ThreadPoolExecutor | None" = None
 _PREFETCH_FUTURES: dict[tuple, "object"] = {}
 

@@ -49,6 +49,12 @@ def test_bench_emits_one_json_line():
     full = os.environ.get("SPARK_GRAFT_FULL_MIRROR", "") not in ("", "0")
     names = list(e.queries())
     subset = names if full else names[:25] + names[25::25]
+    if not full:
+        print(
+            f"# bench contract: DEFAULT mode runs {len(subset)} of {len(names)} "
+            f"registry entries and skips {len(names) - len(subset)}; set "
+            "SPARK_GRAFT_FULL_MIRROR=1 to run them all"
+        )
     env = dict(
         os.environ,
         SPARK_GRAFT_SF_DIR=SF_SMOKE,

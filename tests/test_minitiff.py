@@ -596,6 +596,26 @@ def test_fuzz_corruption_never_escapes_tifferror(tmp_path_factory, seed):
         pass  # the contract: structured failure, not parser UB
 
 
+def test_corrupt_tag_count_is_tifferror_not_memoryerror(tmp_path):
+    """A corrupted count on an out-of-line tag (here ModelPixelScale,
+    claiming 2**32 - 1 doubles, ~34 GB) must fail as a truncation TiffError
+    before the reader tries to allocate that many bytes."""
+    arr = np.arange(24 * 24, dtype="u1").reshape(24, 24)
+    p = tmp_path / "c.tif"
+    M.write_geotiff(p, arr, 32633, M.from_origin(0, 24, 1, 1), tile=(16, 16))
+    buf = bytearray(p.read_bytes())
+    (ifd,) = struct.unpack("<I", buf[4:8])
+    (n,) = struct.unpack("<H", buf[ifd : ifd + 2])
+    for i in range(n):
+        at = ifd + 2 + 12 * i
+        if struct.unpack("<H", buf[at : at + 2])[0] == 33550:
+            buf[at + 4 : at + 8] = struct.pack("<I", 2**32 - 1)
+    p.write_bytes(bytes(buf))
+    with pytest.raises(M.TiffError, match="truncated"):
+        with M.MiniTiffDataset(str(p)) as ds:
+            ds.read_full()
+
+
 # ---------------------------------------------------------------------------
 # r6 review fixes
 # ---------------------------------------------------------------------------

@@ -94,6 +94,20 @@ def test_jaro_winkler_pairs_guard_passthrough(spark):
         jaro_winkler_pairs(df, "name", ["blk"], "id", max_block=5)
 
 
+def test_fuzzy_pairs_never_pair_an_id_with_itself(spark):
+    """One id under two similar names in one block: the name-level scoring
+    must not explode that name pair into an (id, id) self-pair."""
+    from stackstac_spark.operators.linkage import edit_distance_pairs, jaro_winkler_pairs
+
+    df = _names(spark, [(1, "a", "jon"), (1, "a", "john"), (2, "a", "joan")])
+    ed = edit_distance_pairs(df, "name", ["blk"], "id", max_distance=2).collect()
+    jw = jaro_winkler_pairs(df, "name", ["blk"], "id", threshold=0.7).collect()
+    for rows in (ed, jw):
+        assert rows, "the fixture's cross-id pairs must still match"
+        assert all(r["id_a"] != r["id_b"] for r in rows)
+        assert {(r["id_a"], r["id_b"]) for r in rows} == {(1, 2)}
+
+
 # ---------------------------------------------------------------- evalmetrics
 
 

@@ -139,6 +139,26 @@ def test_explicit_bounds_drop_and_clip(spark, small_stack_items):
     np.testing.assert_array_equal(st.compute(), oracle)
 
 
+def test_slice_bounds_prunes_to_overlapping_tiles(spark):
+    items = [make_item(0, "2024-01-05T00:00:00Z", (0.0, 0.0, 64.0, 64.0))]
+    st = stack(spark, items, assets=["red"], chunksize=16)
+    box = (20.0, 30.0, 36.0, 50.0)
+    full = st.tiles.select("tile_y", "tile_x", "row_off", "col_off", "tile_h", "tile_w").collect()
+    xres, yres = st.spec.resolutions_xy
+    minx, _, _, maxy = st.spec.bounds
+    overlapping = {
+        (r.tile_y, r.tile_x)
+        for r in full
+        if minx + r.col_off * xres < box[2]
+        and minx + (r.col_off + r.tile_w) * xres > box[0]
+        and maxy - (r.row_off + r.tile_h) * yres < box[3]
+        and maxy - r.row_off * yres > box[1]
+    }
+    kept = {(r.tile_y, r.tile_x) for r in st.slice_bounds(box).tiles.collect()}
+    assert len(kept) < len(full) == 16
+    assert kept == overlapping
+
+
 def test_cross_crs_bbox_union(spark):
     """Items in UTM, output in 4326: bounds must come from 4-corner
     reprojection."""
