@@ -16,11 +16,12 @@ Two physical strategies, both shuffle-minimal:
    own numpy fold ``out = where(invalid(out), layer, out)`` with its
    short-circuit when no invalid pixels remain (ops.py:59-62) — Arrow-batched
    via applyInPandas. Preferred when tiles are dense; identical results.
+   ``operators.warp.xyztile_mosaic`` runs the same fold over warped items.
 """
 
 from __future__ import annotations
 
-from typing import Iterator
+from typing import Iterable
 
 import numpy as np
 import pandas as pd
@@ -72,23 +73,21 @@ TILE_MOSAIC_SCHEMA = T.StructType(
 )
 
 
-def _mosaic_fold(arrs: list[np.ndarray], idxs: np.ndarray, reverse: bool, nodata: float) -> np.ndarray:
-    """The reference's numpy kernel (ops.py:11-72): fold top-to-bottom,
-    short-circuit when complete."""
-    order = np.argsort(idxs)
-    if not reverse:
-        order = order[::-1]  # last-on-top: highest idx first
+def _mosaic_fold(layers: Iterable[np.ndarray], nodata: float) -> np.ndarray | None:
+    """The reference's numpy kernel (ops.py:11-72): fold the layers, given
+    top-first, filling the output's invalid pixels; stop once none remain
+    (ops.py:59-62). ``layers`` is consumed lazily, so a layer under a
+    complete output is never computed."""
     isnan = isinstance(nodata, float) and np.isnan(nodata)
     out = None
-    for k in order:
-        layer = arrs[k]
+    for layer in layers:
         if out is None:
             out = layer.copy()
-            continue
+        else:
+            out[invalid] = layer[invalid]
         invalid = np.isnan(out) if isnan else (out == nodata)
         if not invalid.any():
-            break  # short-circuit (ops.py:59-62)
-        out[invalid] = layer[invalid]
+            break
     return out
 
 
@@ -102,13 +101,19 @@ def mosaic_tiles(
     """
     _validate_nodata(nodata, dtype)
 
-    def fold(key, pdf: pd.DataFrame) -> pd.DataFrame:
+    def fold(key, pdf):
         first = pdf.iloc[0]
-        arrs = [
-            np.frombuffer(b, dtype=dtype).reshape(first.tile_h, first.tile_w)
-            for b in pdf["data"]
-        ]
-        out = _mosaic_fold(arrs, pdf["item_idx"].to_numpy(), reverse, nodata)
+        order = np.argsort(pdf["item_idx"].to_numpy())
+        if not reverse:
+            order = order[::-1]  # last-on-top: highest idx first
+        data = pdf["data"].to_numpy()
+        out = _mosaic_fold(
+            (
+                np.frombuffer(data[k], dtype=dtype).reshape(first.tile_h, first.tile_w)
+                for k in order
+            ),
+            nodata,
+        )
         return pd.DataFrame(
             [
                 (

@@ -10,6 +10,11 @@ touches O(tilesize²) source pixels at its own level instead of the full
 resolution — the same contract COG readers get from overviews
 (reference rio_reader.py opens with OVERVIEW_LEVEL via WarpedVRT, and
 show.py's dask graph gets this for free from the input's overviews).
+``xyztile_from_pyramid`` then warps and mosaics the tile from that level in
+one stage (``operators.warp.xyztile_mosaic``).
+
+Level 0 is the stack's own tile table, whose payload is in the stack's
+dtype; coarser levels are warp output, always float64.
 """
 
 from __future__ import annotations
@@ -25,9 +30,14 @@ from stackstac_spark.raster_spec import RasterSpec
 
 @dataclass
 class Pyramid:
-    """levels[0] = full resolution; levels[k] = 2^k× coarser."""
+    """levels[0] = full resolution; levels[k] = 2^k× coarser. ``dtype`` is
+    the level-0 payload dtype (the stack's)."""
 
     levels: list[tuple[RasterSpec, DataFrame]]
+    dtype: str
+
+    def level_dtype(self, k: int) -> str:
+        return self.dtype if k == 0 else "float64"
 
     @property
     def n_levels(self) -> int:
@@ -42,6 +52,8 @@ def build_pyramid(
     method: str = "linear",
     min_side: int = 256,
     persist: bool = True,
+    *,
+    dtype: str,
 ) -> Pyramid:
     """Downsample the tile table into power-of-2 overview levels.
 
@@ -49,7 +61,9 @@ def build_pyramid(
     whole pyramid reads each source pixel ~4/3 times, never re-scanning full
     resolution per level. Levels are persisted (lazily) by default; for a
     serving deployment write them with ``operators.export.write_tiles`` and
-    reload, which adds Parquet partition pruning on top.
+    reload, which adds Parquet partition pruning on top. ``dtype`` is the
+    payload dtype of ``tiles``; it has no default because level 0 is
+    served by reading the payload in it.
     """
     from stackstac_spark.operators.warp import reproject_tiles
 
@@ -57,7 +71,7 @@ def build_pyramid(
         side = max(spec.shape)
         n_levels = max(int(math.floor(math.log2(max(side / min_side, 1)))) + 1, 1)
 
-    levels = [(spec, tiles)]
+    pyr = Pyramid([(spec, tiles)], dtype)
     cur_spec, cur_tiles = spec, tiles
     for k in range(1, n_levels):
         rx, ry = spec.resolutions_xy
@@ -65,13 +79,18 @@ def build_pyramid(
         if min(nspec.shape) < 1:
             break
         ntiles = reproject_tiles(
-            cur_tiles, cur_spec, nspec, chunksize=chunksize, method=method
+            cur_tiles,
+            cur_spec,
+            nspec,
+            chunksize=chunksize,
+            method=method,
+            dtype=pyr.level_dtype(k - 1),
         )
         if persist:
             ntiles = ntiles.persist()
-        levels.append((nspec, ntiles))
+        pyr.levels.append((nspec, ntiles))
         cur_spec, cur_tiles = nspec, ntiles
-    return Pyramid(levels)
+    return pyr
 
 
 def pick_level(pyramid: Pyramid, z: int, tilesize: int = 256) -> int:
@@ -97,10 +116,16 @@ def xyztile_from_pyramid(
     tilesize: int = 256,
     method: str = "linear",
 ) -> tuple[DataFrame | None, int]:
-    """Serve one XYZ tile from the best pyramid level; returns
-    (tile DataFrame or None, level used)."""
-    from stackstac_spark.operators.warp import xyztile_of_tiles
+    """Serve one XYZ tile from the best pyramid level, warped and mosaicked
+    over items in one stage; returns (``TILE_MOSAIC_SCHEMA`` frame with one
+    row per band, or None if the tile misses the stack; level used)."""
+    from stackstac_spark.operators.warp import xyztile_mosaic
 
     k = pick_level(pyramid, z, tilesize)
     spec_k, tiles_k = pyramid.levels[k]
-    return xyztile_of_tiles(tiles_k, spec_k, z, x, y, tilesize=tilesize, method=method), k
+    return (
+        xyztile_mosaic(
+            tiles_k, spec_k, z, x, y, tilesize=tilesize, method=method, dtype=pyramid.level_dtype(k)
+        ),
+        k,
+    )

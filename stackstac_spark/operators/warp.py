@@ -8,8 +8,14 @@ Physical strategy: the OUTPUT grid is tiled; for each output tile we compute
 source tiles (an overlap join — the bounded-halo exchange SURVEY §7 calls
 for), and interpolate per output tile in an Arrow-batched kernel. Nearest,
 bilinear, and cubic (Keys a=-0.5, the rasterio Resampling.cubic kernel)
-interpolation are implemented in numpy directly (scipy is not in this
-container; interpn on a regular grid reduces to index arithmetic).
+interpolation are implemented in numpy directly (scipy is not a
+dependency; interpn on a regular grid reduces to index arithmetic).
+
+A served map tile (``xyztile_mosaic``) is one output tile, so it skips the
+join: its one source window is a literal filter on the source tiles, and a
+single per-band kernel warps each item top-first and folds it into the
+mosaic, stopping once the tile is full — the reference's per-tile
+``_compute_tile`` (show.py:343-397) as one Spark stage.
 
 The reference collapses spatial chunks to warp whole arrays at once
 (geom_utils.py:245-248 admits this doesn't scale); the per-output-tile
@@ -19,7 +25,6 @@ halo join here is the 100 TB-safe version: work and memory stay O(tile).
 from __future__ import annotations
 
 import math
-from typing import Iterator
 
 import numpy as np
 import pandas as pd
@@ -190,14 +195,14 @@ def _bounds_9pt_udf(out_epsg: int):
     return _reproject
 
 
-def _dst_tiles_driver(
-    spark, src_spec: RasterSpec, dst_spec: RasterSpec, chunksize: int, halo: int
-) -> DataFrame:
-    """Small-grid fastpath: build the dst tile table with vectorized numpy on
-    the driver — zero Spark jobs, no Python workers. Same arithmetic as the
-    executor-side path (4-corner reprojection, 1e-9 outward rounding) so
-    results are identical; only used when the grid is a few thousand tiles
-    (one XYZ tile, a single-raster resample — the common interactive case)."""
+def _src_windows(
+    src_spec: RasterSpec, dst_spec: RasterSpec, chunksize: int, halo: int
+) -> pd.DataFrame:
+    """The dst tile table (``_DST_TILES_SCHEMA``) built with vectorized numpy
+    on the driver: each dst tile and the outward-rounded, halo-padded source
+    pixel window ``[sr0, sr1) x [sc0, sc1)`` it gathers from. Same arithmetic
+    as the executor-side path (1e-9 outward rounding) so results are
+    identical. Serves small warp grids and the one window of an XYZ tile."""
     dh, dw = dst_spec.shape
     n_ty = -(-dh // chunksize)
     n_tx = -(-dw // chunksize)
@@ -243,7 +248,7 @@ def _dst_tiles_driver(
     row_off = (smaxy - s3) / syres
     height = (s3 - s1) / syres
     width = (s2 - s0) / sxres
-    pdf = pd.DataFrame(
+    return pd.DataFrame(
         {
             "dty": dty.astype("int32"),
             "dtx": dtx.astype("int32"),
@@ -257,7 +262,82 @@ def _dst_tiles_driver(
             "sc1": (np.ceil(col_off + width - 1e-9) + halo).astype("int32"),
         }
     )
-    return spark.createDataFrame(pdf, schema=_DST_TILES_SCHEMA)
+
+
+def _window_overlap(sr0, sc0, sr1, sc1):
+    """Source tiles whose pixel extent meets the window [sr0, sr1) x
+    [sc0, sc1); the bounds are columns (a join) or ints (a literal filter)."""
+    return (
+        (F.col("row_off") < sr1)
+        & (F.col("row_off") + F.col("tile_h") > sr0)
+        & (F.col("col_off") < sc1)
+        & (F.col("col_off") + F.col("tile_w") > sc0)
+    )
+
+
+def _assemble_block(rows: pd.DataFrame, window: tuple[int, int, int, int], dtype: str) -> np.ndarray:
+    """The padded float64 source block ``[sr0, sr1) x [sc0, sc1)`` from one
+    item's source tiles; pixels no tile covers stay NaN. The payload dtype
+    is a stack parameter (``RasterStack.dtype``); the block is float64
+    because interpolation is."""
+    sr0, sc0, sr1, sc1 = window
+    block = np.full((sr1 - sr0, sc1 - sc0), np.nan)
+    for row in rows.itertuples(index=False):
+        arr = np.frombuffer(row.data, dtype=dtype).reshape(row.tile_h, row.tile_w)
+        rr0 = max(row.row_off, sr0)
+        rr1 = min(row.row_off + row.tile_h, sr1)
+        cc0 = max(row.col_off, sc0)
+        cc1 = min(row.col_off + row.tile_w, sc1)
+        if rr1 > rr0 and cc1 > cc0:
+            block[rr0 - sr0 : rr1 - sr0, cc0 - sc0 : cc1 - sc0] = arr[
+                rr0 - row.row_off : rr1 - row.row_off, cc0 - row.col_off : cc1 - row.col_off
+            ]
+    return block
+
+
+def _crop_to_window(tiles: DataFrame, window: tuple[int, int, int, int], dtype: str) -> DataFrame:
+    """The source tiles under the window ``[sr0, sr1) x [sc0, sc1)``. A tile
+    that fits in the window stays whole; a bigger one is cut down to its
+    part inside it. So what crosses the exchange to a served tile's kernel
+    is at most 9x the window's pixels per item, whatever the stack's
+    chunksize. A narrow JVM projection (byte ``substring`` of the row-major
+    payload, no Python): a cut tile within the window's columns keeps one
+    contiguous run of rows; a wider one becomes one single-row strip per
+    window row."""
+    sr0, sc0, sr1, sc1 = window
+    isz = np.dtype(dtype).itemsize
+    data, ro, co, h, w = (F.col(c) for c in ("data", "row_off", "col_off", "tile_h", "tile_w"))
+    r0, r1 = F.greatest(ro, F.lit(sr0)), F.least(ro + h, F.lit(sr1))
+    c0, c1 = F.greatest(co, F.lit(sc0)), F.least(co + w, F.lit(sc1))
+    big = (h > sr1 - sr0) | (w > sc1 - sc0)
+    strips = big & ((c0 != co) | (c1 != co + w))
+    strip = F.col("strip")
+    row_off = F.when(strips, r0 + strip).when(big, r0).otherwise(ro)
+    tile_h = F.when(strips, 1).when(big, r1 - r0).otherwise(h)
+    col_off = F.when(strips, c0).otherwise(co)
+    tile_w = F.when(strips, c1 - c0).otherwise(w)
+    start = (row_off - ro) * w + (col_off - co)
+    return (
+        tiles.filter(_window_overlap(*window))
+        .select("*", F.explode(F.sequence(F.lit(0), F.when(strips, r1 - r0 - 1).otherwise(0))).alias("strip"))
+        .select(
+            "item_idx",
+            "band_idx",
+            row_off.alias("row_off"),
+            col_off.alias("col_off"),
+            tile_h.alias("tile_h"),
+            tile_w.alias("tile_w"),
+            F.when(big, F.substring(data, start * isz + 1, tile_h * tile_w * isz)).otherwise(data).alias("data"),
+        )
+    )
+
+
+def _interp_method(method: str) -> str:
+    if method not in ("nearest", "linear", "bilinear", "cubic"):
+        raise ValueError(
+            f"interpolation must be nearest/linear/cubic, got {method!r}"
+        )
+    return {"nearest": "nearest", "cubic": "cubic"}.get(method, "bilinear")
 
 
 def reproject_tiles(
@@ -291,11 +371,7 @@ def reproject_tiles(
       driver loop would serialize the job before it starts (plan-guarded by
       tests/test_plan_quality.py).
     """
-    if method not in ("nearest", "linear", "bilinear", "cubic"):
-        raise ValueError(
-            f"interpolation must be nearest/linear/cubic, got {method!r}"
-        )
-    meth = {"nearest": "nearest", "cubic": "cubic"}.get(method, "bilinear")
+    meth = _interp_method(method)
     spark = tiles.sparkSession
     dh, dw = dst_spec.shape
     n_ty = -(-dh // chunksize)
@@ -306,7 +382,9 @@ def reproject_tiles(
     sminx, _, _, smaxy = src_spec.bounds
 
     if n_ty * n_tx <= grid_on_driver_max:
-        dst_tiles = _dst_tiles_driver(spark, src_spec, dst_spec, chunksize, halo)
+        dst_tiles = spark.createDataFrame(
+            _src_windows(src_spec, dst_spec, chunksize, halo), schema=_DST_TILES_SCHEMA
+        )
     else:
         reproj = _bounds_9pt_udf(src_spec.epsg)
 
@@ -373,12 +451,7 @@ def reproject_tiles(
     #   pairs pull the payload back with one hash join on the tile key.
     #   Pairs dedupe via the canonical-bin trick (keep the pair only in
     #   the top-left bin of the window intersection), not a distinct.
-    overlap = (
-        (F.col("row_off") < F.col("sr1"))
-        & (F.col("row_off") + F.col("tile_h") > F.col("sr0"))
-        & (F.col("col_off") < F.col("sc1"))
-        & (F.col("col_off") + F.col("tile_w") > F.col("sc0"))
-    )
+    overlap = _window_overlap(F.col("sr0"), F.col("sc0"), F.col("sr1"), F.col("sc1"))
     if n_ty * n_tx <= broadcast_dst_max:
         joined = tiles.join(F.broadcast(dst_tiles), overlap)
     else:
@@ -455,38 +528,20 @@ def reproject_tiles(
             pairs, ["item_idx", "band_idx", "row_off", "col_off", "tile_h", "tile_w"]
         )
 
-    src_spec_b = src_spec
-    dst_spec_b = dst_spec
     from stackstac_spark.functions.proj import install_user_crs, user_crs_snapshot
 
     _crs_snap = user_crs_snapshot()
 
-    def warp_group(key, pdf: pd.DataFrame) -> pd.DataFrame:
+    def warp_group(key, pdf):
         install_user_crs(_crs_snap)
         item_idx, band_idx, dty, dtx = (int(k) for k in key)
         first = pdf.iloc[0]
-        sr0, sc0 = int(first.sr0), int(first.sc0)
-        block = np.full((int(first.sr1) - sr0, int(first.sc1) - sc0), np.nan)
-        for row in pdf.itertuples(index=False):
-            # tile payload dtype is a stack parameter (RasterStack.dtype) —
-            # hardcoding float64 here crashed (or silently misread) any
-            # non-float64 stack; the warp OUTPUT stays float64 (interpolation)
-            arr = np.frombuffer(row.data, dtype=dtype).reshape(
-                row.tile_h, row.tile_w
-            ).astype("float64", copy=False)
-            rr0 = max(row.row_off, sr0)
-            rr1 = min(row.row_off + row.tile_h, int(first.sr1))
-            cc0 = max(row.col_off, sc0)
-            cc1 = min(row.col_off + row.tile_w, int(first.sc1))
-            if rr1 > rr0 and cc1 > cc0:
-                block[rr0 - sr0 : rr1 - sr0, cc0 - sc0 : cc1 - sc0] = arr[
-                    rr0 - row.row_off : rr1 - row.row_off, cc0 - row.col_off : cc1 - row.col_off
-                ]
+        window = (int(first.sr0), int(first.sc0), int(first.sr1), int(first.sc1))
         out = _interp_tile(
-            block,
-            src_spec_b,
-            (sr0, sc0),
-            dst_spec_b,
+            _assemble_block(pdf, window, dtype),
+            src_spec,
+            window[:2],
+            dst_spec,
             (int(first.dr0), int(first.dc0), int(first.dh), int(first.dw)),
             meth,
         )
@@ -506,6 +561,20 @@ def reproject_tiles(
     )
 
 
+def _xyz_dst_spec(src_spec: RasterSpec, z: int, x: int, y: int, tilesize: int) -> RasterSpec | None:
+    """The EPSG:3857 grid of OSM tile (z, x, y) at ``tilesize`` px, or None if
+    the tile doesn't overlap the stack."""
+    from stackstac_spark.functions.proj import reproject_bounds
+    from stackstac_spark.raster_spec import bounds_overlap
+
+    bounds = xyz_tile_bounds(z, x, y)
+    stack_in_3857 = reproject_bounds(src_spec.bounds, src_spec.epsg, 3857)
+    if not bounds_overlap(bounds, stack_in_3857):
+        return None
+    res = (bounds[2] - bounds[0]) / tilesize
+    return RasterSpec(3857, bounds, (res, res))
+
+
 def xyztile_of_tiles(
     tiles: DataFrame,
     src_spec: RasterSpec,
@@ -519,13 +588,70 @@ def xyztile_of_tiles(
     """Warp the stack to one OSM tile (geom_utils.py:307-383): returns a tile
     DataFrame with one (tilesize×tilesize) EPSG:3857 tile per (item, band),
     or None if the tile doesn't overlap the stack."""
-    bounds = xyz_tile_bounds(z, x, y)
-    from stackstac_spark.functions.proj import reproject_bounds
-    from stackstac_spark.raster_spec import bounds_overlap
-
-    stack_in_3857 = reproject_bounds(src_spec.bounds, src_spec.epsg, 3857)
-    if not bounds_overlap(bounds, stack_in_3857):
+    dst_spec = _xyz_dst_spec(src_spec, z, x, y, tilesize)
+    if dst_spec is None:
         return None
-    res = (bounds[2] - bounds[0]) / tilesize
-    dst_spec = RasterSpec(3857, bounds, (res, res))
     return reproject_tiles(tiles, src_spec, dst_spec, chunksize=tilesize, method=method, dtype=dtype)
+
+
+def xyztile_mosaic(
+    tiles: DataFrame,
+    src_spec: RasterSpec,
+    z: int,
+    x: int,
+    y: int,
+    tilesize: int = 256,
+    method: str = "linear",
+    dtype: str = "float64",
+) -> DataFrame | None:
+    """One OSM tile, warped and mosaicked last-on-top over items: one
+    ``TILE_MOSAIC_SCHEMA`` row per band, or None if the tile doesn't overlap
+    the stack. Equal, byte for byte, to
+    ``mosaic_tiles(xyztile_of_tiles(...))``, in one stage:
+
+    1. the tile's one source window is computed on the driver
+       (``_src_windows``);
+    2. a literal overlap filter keeps the source tiles under it, each cut
+       down to the window before the exchange (``_crop_to_window``), so a
+       band's group holds O(items x window²) bytes;
+    3. one ``groupBy("band_idx").applyInPandas`` assembles each item's
+       padded block and interpolates it, top item (highest ``item_idx``)
+       first, folding it into the output (``_mosaic_fold``);
+    4. the fold stops once the tile has no invalid pixels, so the items
+       underneath are never warped.
+    """
+    from stackstac_spark.functions.proj import install_user_crs, user_crs_snapshot
+    from stackstac_spark.operators.mosaic import TILE_MOSAIC_SCHEMA, _mosaic_fold
+
+    meth = _interp_method(method)
+    dst_spec = _xyz_dst_spec(src_spec, z, x, y, tilesize)
+    if dst_spec is None:
+        return None
+    # the same window and halo reproject_tiles gives a one-tile dst grid
+    (w,) = _src_windows(src_spec, dst_spec, tilesize, halo=2).itertuples(index=False)
+    window = (int(w.sr0), int(w.sc0), int(w.sr1), int(w.sc1))
+    dst_window = (int(w.dr0), int(w.dc0), int(w.dh), int(w.dw))
+    _crs_snap = user_crs_snapshot()
+
+    def warp_fold(key, pdf):
+        install_user_crs(_crs_snap)
+        items = reversed(list(pdf.groupby("item_idx", sort=True)))
+        out = _mosaic_fold(
+            (
+                _interp_tile(
+                    _assemble_block(rows, window, dtype), src_spec, window[:2], dst_spec, dst_window, meth
+                )
+                for _, rows in items
+            ),
+            np.nan,
+        )
+        return pd.DataFrame(
+            [(int(key[0]), int(w.dty), int(w.dtx), *dst_window, out.tobytes())],
+            columns=[f.name for f in TILE_MOSAIC_SCHEMA.fields],
+        )
+
+    return (
+        _crop_to_window(tiles, window, dtype)
+        .groupBy("band_idx")
+        .applyInPandas(warp_fold, TILE_MOSAIC_SCHEMA)
+    )

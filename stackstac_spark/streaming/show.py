@@ -5,11 +5,14 @@
   percentiles (show.py:484-497), token the layer (plan fingerprint), cache
   the tile DataFrame so every map tile reuses the same computed stack.
 - ``TileServer``          → stdlib ThreadingHTTPServer serving
-  ``/{token}/{z}/{x}/{y}.png``; each request warps the cached stack to the
-  requested XYZ tile (operators.warp.xyztile_of_tiles), mosaics bands, and
-  PNG-encodes — a Spark job per tile, grouped under a per-layer job group so
-  out-of-view requests are cancellable (sc.cancelJobGroup, the analogue of
-  the reference's speculative-tile cancellation, show.py:242-257).
+  ``/{token}/{z}/{x}/{y}.png``; each request warps and mosaics the
+  requested XYZ tile from the layer's overview pyramid in one stage
+  (operators.pyramid.xyztile_from_pyramid → operators.warp.xyztile_mosaic:
+  one groupBy-band kernel, top item first, stopping once the tile is
+  full), collects one row per band and PNG-encodes. The tile's jobs run
+  under a per-layer job group so out-of-view requests are cancellable
+  (sc.cancelJobGroup, the analogue of the reference's speculative-tile
+  cancellation, show.py:242-257).
 - LRU tile cache of 512 entries (show.py:44-45).
 
 aiohttp/ipyleaflet are not available here; the HTTP protocol and URL shape
@@ -28,8 +31,8 @@ import numpy as np
 
 from stackstac_spark.functions.png import arr_to_png, empty_tile
 from stackstac_spark.operators.composite import display_range
-from stackstac_spark.operators.mosaic import mosaic_tiles
-from stackstac_spark.operators.warp import xyztile_of_tiles
+# perfbench's tracer patches this name here; ROADMAP direction 4 removes that patching
+from stackstac_spark.operators.mosaic import mosaic_tiles  # noqa: F401
 
 _CACHE_SIZE = 512
 
@@ -41,7 +44,7 @@ class Layer:
     cmap: str | None
     checkerboard: bool
     token: str
-    pyramid: "object | None" = None  # operators.pyramid.Pyramid
+    pyramid: "object"  # operators.pyramid.Pyramid
     tile_cache: OrderedDict = field(default_factory=OrderedDict)
     lock: threading.Lock = field(default_factory=threading.Lock)
 
@@ -84,36 +87,32 @@ def register(
     # low-zoom request and is then shared by every later one.
     from stackstac_spark.operators.pyramid import build_pyramid
 
-    pyr = build_pyramid(stack.tiles, stack.spec, n_levels=pyramid_levels)
+    pyr = build_pyramid(stack.tiles, stack.spec, n_levels=pyramid_levels, dtype=stack.dtype)
     _LAYERS[token] = Layer(stack, range, cmap, checkerboard, token, pyramid=pyr)
     return token
 
 
 def compute_tile(layer: Layer, z: int, x: int, y: int, tilesize: int = 256) -> bytes:
-    """One XYZ tile: warp → per-band mosaic over time → dense assemble →
-    PNG (the reference's _compute_tile, show.py:343-397)."""
+    """One XYZ tile (the reference's _compute_tile, show.py:343-397): one
+    Spark stage warps and mosaics every item per band from the pyramid
+    level ``pick_level`` chooses; the band rows are collected into a dense
+    array and PNG-encoded."""
     with layer.lock:
         cached = layer.tile_cache.get((z, x, y))
         if cached is not None:
             layer.tile_cache.move_to_end((z, x, y))
             return cached
+    from stackstac_spark.operators.pyramid import xyztile_from_pyramid
+
     st = layer.stack
-    spark = st.tiles.sparkSession
-    sc = spark.sparkContext
+    sc = st.tiles.sparkSession.sparkContext
     sc.setJobGroup(f"tile-{layer.token}", f"tile z={z} x={x} y={y}", interruptOnCancel=True)
     try:
-        if layer.pyramid is not None:
-            from stackstac_spark.operators.pyramid import xyztile_from_pyramid
-
-            warped, _level = xyztile_from_pyramid(layer.pyramid, z, x, y, tilesize=tilesize)
-        else:
-            warped = xyztile_of_tiles(
-                st.tiles, st.spec, z, x, y, tilesize=tilesize, dtype=st.dtype
-            )
-        if warped is None:
+        mosaic, _level = xyztile_from_pyramid(layer.pyramid, z, x, y, tilesize=tilesize)
+        if mosaic is None:
             png = empty_tile((tilesize, tilesize), layer.checkerboard)
         else:
-            rows = mosaic_tiles(warped).collect()
+            rows = mosaic.collect()
             arr = np.full((len(st.asset_ids), tilesize, tilesize), np.nan)
             for r in rows:
                 arr[r.band_idx] = np.frombuffer(r.data, dtype="float64").reshape(

@@ -148,6 +148,38 @@ def test_warp_small_grid_builds_on_driver(spark):
     assert not grid_arrow, grid_arrow
 
 
+def test_xyz_tile_is_one_exchange_over_the_cached_tiles(spark):
+    """A served XYZ tile is one stage over the cached level: the source
+    window is a literal filter sitting directly on the InMemoryTableScan
+    (no broadcast join against a dst grid), the source tiles are cut to the
+    window before the exchange, and the per-band warp + mosaic kernel adds
+    the only Exchange."""
+    from stackstac_spark.operators.pyramid import build_pyramid, xyztile_from_pyramid
+    from stackstac_spark.operators.warp import xyz_tile_bounds
+    from stackstac_spark.stack import stack as _stack
+    from tests.conftest import make_item
+
+    b = xyz_tile_bounds(8, 128, 128)
+    item = make_item(
+        0, "2024-01-05T00:00:00Z", b, epsg=3857, assets=("red", "nir"), res=(b[2] - b[0]) / 64
+    )
+    st = _stack(spark, [item], assets=["red", "nir"], chunksize=32)
+    st.tiles.cache()
+    pyr = build_pyramid(st.tiles, st.spec, dtype=st.dtype, n_levels=1, persist=False)
+    df, level = xyztile_from_pyramid(pyr, 8, 128, 128, tilesize=64)
+    assert level == 0
+    # the part of the plan above the cached relation is the per-tile work
+    per_tile = _plan(df).split("InMemoryRelation")[0]
+    assert per_tile.count("Exchange") == 1, per_tile
+    assert "BroadcastNestedLoopJoin" not in per_tile, per_tile
+    lines = per_tile.splitlines()
+    scan = next(i for i, ln in enumerate(lines) if "InMemoryTableScan" in ln)
+    assert "Filter" in lines[scan - 1] and "row_off" in lines[scan - 1], per_tile
+    exchange = next(i for i, ln in enumerate(lines) if "Exchange" in ln)
+    crop = next(i for i, ln in enumerate(lines) if "Generate" in ln)
+    assert exchange < crop < scan, per_tile
+
+
 def test_asof_join_is_window_not_range_join(spark, entry):
     """The asof gate query must use the sort-based plan: one Window over the
     per-user union, and no join node at all — the range-join form explodes

@@ -26,7 +26,7 @@ def fine_stack(spark):
 
 
 def test_build_pyramid_levels(spark, fine_stack):
-    pyr = build_pyramid(fine_stack.tiles, fine_stack.spec, n_levels=3, persist=False)
+    pyr = build_pyramid(fine_stack.tiles, fine_stack.spec, dtype=fine_stack.dtype, n_levels=3, persist=False)
     assert pyr.n_levels == 3
     (s0, _), (s1, _), (s2, _) = pyr.levels
     assert s0.shape == (256, 256)
@@ -37,13 +37,13 @@ def test_build_pyramid_levels(spark, fine_stack):
 
 def test_auto_level_count(spark, fine_stack):
     # 256 px base with min_side=64: 256 → 128 → 64 = 3 levels
-    pyr = build_pyramid(fine_stack.tiles, fine_stack.spec, min_side=64, persist=False)
+    pyr = build_pyramid(fine_stack.tiles, fine_stack.spec, dtype=fine_stack.dtype, min_side=64, persist=False)
     assert pyr.n_levels == 3
     assert pyr.levels[-1][0].shape == (64, 64)
 
 
 def test_pick_level_routes_low_zoom_coarse(fine_stack):
-    pyr = build_pyramid(fine_stack.tiles, fine_stack.spec, n_levels=4, persist=False)
+    pyr = build_pyramid(fine_stack.tiles, fine_stack.spec, dtype=fine_stack.dtype, n_levels=4, persist=False)
     # native ~10 m px: a z=13 256px tile is ~19 m/px → level 0 or 1;
     # z=8 is ~611 m/px → must be the coarsest available level
     assert pick_level(pyr, 15) == 0
@@ -57,7 +57,7 @@ def test_pick_level_routes_low_zoom_coarse(fine_stack):
 def test_low_zoom_never_touches_full_res(spark, fine_stack):
     """The DataFrame served for z<=8 must BE a coarse level's table, not the
     level-0 tiles."""
-    pyr = build_pyramid(fine_stack.tiles, fine_stack.spec, n_levels=3, persist=False)
+    pyr = build_pyramid(fine_stack.tiles, fine_stack.spec, dtype=fine_stack.dtype, n_levels=3, persist=False)
 
     used = {}
     for z in (1, 4, 8):
@@ -68,15 +68,19 @@ def test_low_zoom_never_touches_full_res(spark, fine_stack):
 
 
 def test_pyramid_tile_matches_direct_warp_values(spark, fine_stack):
-    """A level-0 route must be byte-identical to the direct warp; a coarse
-    route must still cover the same footprint with finite data."""
+    """A level-0 route must be byte-identical to the direct warp + mosaic; a
+    coarse route must equal the same warp + mosaic of its level and still
+    cover the footprint with finite data."""
     from stackstac_spark.operators.mosaic import mosaic_tiles
     from stackstac_spark.operators.warp import xyztile_of_tiles
     from stackstac_spark.functions.proj import reproject_bounds
     from stackstac_spark.operators.warp import WEB_MERCATOR_EXTENT as EXT
 
+    def by_band(rows):
+        return {(r.band_idx, r.row_off, r.col_off): r.data for r in rows}
+
     st = fine_stack
-    pyr = build_pyramid(st.tiles, st.spec, n_levels=3, persist=False)
+    pyr = build_pyramid(st.tiles, st.spec, dtype=st.dtype, n_levels=3, persist=False)
     b = reproject_bounds(st.spec.bounds, st.spec.epsg, 3857)
     cx, cy = (b[0] + b[2]) / 2, (b[1] + b[3]) / 2
 
@@ -88,9 +92,7 @@ def test_pyramid_tile_matches_direct_warp_values(spark, fine_stack):
     df_p, level = xyztile_from_pyramid(pyr, z, tx, ty, tilesize=64)
     assert level == 0
     direct = xyztile_of_tiles(st.tiles, st.spec, z, tx, ty, tilesize=64)
-    got = {(r.band_idx, r.row_off, r.col_off): r.data for r in mosaic_tiles(df_p).collect()}
-    want = {(r.band_idx, r.row_off, r.col_off): r.data for r in mosaic_tiles(direct).collect()}
-    assert got == want
+    assert by_band(df_p.collect()) == by_band(mosaic_tiles(direct).collect())
 
     # low zoom → coarse level, still produces data over the footprint
     z = 8
@@ -99,7 +101,10 @@ def test_pyramid_tile_matches_direct_warp_values(spark, fine_stack):
     ty = int((EXT - cy) / (2 * EXT) * n)
     df_c, level_c = xyztile_from_pyramid(pyr, z, tx, ty, tilesize=64)
     assert level_c == pyr.n_levels - 1
-    rows = mosaic_tiles(df_c).collect()
+    rows = df_c.collect()
+    spec_c, tiles_c = pyr.levels[level_c]
+    oracle = mosaic_tiles(xyztile_of_tiles(tiles_c, spec_c, z, tx, ty, tilesize=64))
+    assert by_band(rows) == by_band(oracle.collect())
     arr = np.full((64, 64), np.nan)
     for r in rows:
         arr[:] = np.frombuffer(r.data, dtype="float64").reshape(r.tile_h, r.tile_w)
