@@ -69,8 +69,8 @@ def array_epsg(arr) -> int:
 
 def reproject_array(arr, spec, method: str = "nearest", chunksize: int = 256):
     """Reference ``stackstac.reproject_array`` (geom_utils.py:206-304):
-    warp a RasterStack onto another RasterSpec → a new RasterStack on the
-    destination grid (nearest / linear / cubic)."""
+    warp a RasterStack onto another RasterSpec → a new float64 RasterStack
+    on the destination grid (nearest / linear / cubic)."""
     import dataclasses
 
     from stackstac_spark.operators.warp import reproject_tiles
@@ -78,7 +78,7 @@ def reproject_array(arr, spec, method: str = "nearest", chunksize: int = 256):
     warped = reproject_tiles(
         arr.tiles, arr.spec, spec, chunksize=chunksize, method=method, dtype=arr.dtype
     )
-    return dataclasses.replace(arr, tiles=warped, spec=spec)
+    return dataclasses.replace(arr, tiles=warped, spec=spec, dtype="float64")
 
 
 def xyztile_of_array(
@@ -87,21 +87,12 @@ def xyztile_of_array(
     """Reference ``stackstac.xyztile_of_array`` (geom_utils.py:307-383):
     slice+warp the stack to one OSM tile → a new RasterStack on the
     EPSG:3857 tile grid, or None when the tile misses the stack."""
-    import dataclasses
+    from stackstac_spark.operators.warp import _xyz_dst_spec
 
-    from stackstac_spark.operators.warp import xyz_tile_bounds, xyztile_of_tiles
-    from stackstac_spark.raster_spec import RasterSpec as _Spec
-
-    tiles = xyztile_of_tiles(
-        arr.tiles, arr.spec, z, x, y, tilesize=tilesize, method=method, dtype=arr.dtype
-    )
-    if tiles is None:
+    spec = _xyz_dst_spec(arr.spec, z, x, y, tilesize)
+    if spec is None:
         return None
-    bounds = xyz_tile_bounds(z, x, y)
-    res = (bounds[2] - bounds[0]) / tilesize
-    return dataclasses.replace(
-        arr, tiles=tiles, spec=_Spec(3857, bounds, (res, res))
-    )
+    return reproject_array(arr, spec, method=method, chunksize=tilesize)
 
 
 __all__ = [

@@ -941,6 +941,20 @@ def install_user_crs(snapshot: dict[int, tuple[str, tuple, str]] | None) -> None
             _apply_user_crs(epsg, fam, params, ell)
 
 
+def _per_batch(df, fn, schema):
+    """``df.mapInPandas`` of ``fn`` per Arrow batch, with the driver's
+    registered CRSs installed in the executor process first (worker
+    processes import this module fresh)."""
+    crs = user_crs_snapshot()
+
+    def run(batches):
+        install_user_crs(crs)
+        for pdf in batches:
+            yield fn(pdf)
+
+    return df.mapInPandas(run, schema)
+
+
 # --- public API ------------------------------------------------------------
 
 

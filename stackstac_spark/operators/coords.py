@@ -10,9 +10,12 @@ the rule set:
 - x/y labels are linspace(min, max, n, endpoint=False) top-left corners with
   an optional half-pixel center shift (prepare.py:445-461).
 
-Here coords are dimension tables: ``item_coords`` (one row per item_idx ×
-property) and ``band_coords`` (per band_idx × field), plus generated label
-tables for x/y. All are tiny relative to pixels and broadcast in joins.
+Here coords are dimension tables, tiny relative to pixels and broadcast in
+joins: ``accumulate_metadata`` (the constant⇒scalar rule over item
+properties) and generated label tables for x/y. The time-indexed property
+table is ``items_df`` itself, and ``prepare`` / ``prepare_local`` apply the
+band-field all-same rule (``Prepared.band_fields``); ``RasterStack.create_views``
+publishes both as SQL views.
 """
 
 from __future__ import annotations
@@ -43,31 +46,6 @@ def accumulate_metadata(items_df: DataFrame) -> DataFrame:
             (F.col("n_distinct") == 1).alias("is_scalar"),
             F.when(F.col("n_distinct") == 1, F.col("any_value")).alias("scalar_value"),
         )
-    )
-
-
-def item_coords(items_df: DataFrame, keys: list[str] | None = None) -> DataFrame:
-    """Long-form time coords: (item_idx, key, value) for the non-scalar
-    fields (or an explicit ``keys`` list, mirroring ``properties=`` in the
-    reference's stack())."""
-    kv = items_df.select("item_idx", F.explode("properties").alias("key", "value"))
-    if keys is not None:
-        kv = kv.filter(F.col("key").isin(keys))
-    return kv
-
-
-def band_coords_allsame(assets_df: DataFrame, band_idx_df: DataFrame) -> DataFrame:
-    """Band coords by the all-same rule: (band_idx, key, value) kept iff the
-    value is identical on every item carrying that (asset, key)."""
-    kv = (
-        assets_df.join(F.broadcast(band_idx_df), "asset_id")
-        .select("band_idx", F.explode("fields").alias("key", "value"))
-    )
-    return (
-        kv.groupBy("band_idx", "key")
-        .agg(F.count_distinct("value").alias("n"), F.first("value").alias("value"))
-        .filter(F.col("n") == 1)
-        .select("band_idx", "key", "value")
     )
 
 

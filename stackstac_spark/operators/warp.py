@@ -31,7 +31,12 @@ import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from stackstac_spark.functions.proj import transform_xy
+from stackstac_spark.functions.proj import (
+    _per_batch,
+    install_user_crs,
+    transform_xy,
+    user_crs_snapshot,
+)
 from stackstac_spark.raster_spec import Bbox, RasterSpec
 from stackstac_spark.sources.raster import TILE_SCHEMA
 
@@ -141,85 +146,34 @@ _DST_TILES_SCHEMA = (
 )
 
 
-def _bounds_9pt_udf(out_epsg: int):
-    """Arrow-batched kernel: (bounds, src_epsg) → bounds in out CRS via
-    3x3 boundary-point sampling (corners + edge midpoints + center).
-
-    The warp-footprint variant of prepare's 4-corner
-    ``with_out_bounds`` kernel: mid-edge samples capture graticule
-    curvature extrema (a tile straddling a UTM central meridian has its
-    max northing mid-edge, not at a corner), so the source footprint
-    covers what ``_interp_tile`` will actually gather. prepare keeps the
-    4-corner form (reference ``geom_utils.reproject_bounds`` parity)."""
-    import pandas as pd
-    from pyspark.sql import types as T
-
-    from stackstac_spark.functions.proj import install_user_crs, user_crs_snapshot
-
-    _crs_snap = user_crs_snapshot()
-
-    @F.pandas_udf(T.ArrayType(T.DoubleType()))
-    def _reproject(bounds: pd.Series, epsg: pd.Series) -> pd.Series:
-        install_user_crs(_crs_snap)
-        out = pd.Series([None] * len(bounds), index=bounds.index, dtype=object)
-        valid = bounds.notna() & epsg.notna()
-        if not valid.any():
-            return out
-        b = np.stack(bounds[valid].to_numpy())  # (n, 4)
-        e = epsg[valid].to_numpy().astype("int64")
-        res = np.empty_like(b)
-        midx = (b[:, 0] + b[:, 2]) / 2.0
-        midy = (b[:, 1] + b[:, 3]) / 2.0
-        for code in np.unique(e):
-            m = e == code
-            if int(code) == out_epsg:
-                res[m] = b[m]
-                continue
-            px = [b[m, 0], midx[m], b[m, 2]]
-            py = [b[m, 1], midy[m], b[m, 3]]
-            xs = np.concatenate([px[i] for _ in range(3) for i in range(3)])
-            ys = np.concatenate([py[j] for j in range(3) for _ in range(3)])
-            tx, ty = transform_xy(int(code), out_epsg, xs, ys)
-            n = int(m.sum())
-            txc = tx.reshape(9, n)
-            tyc = ty.reshape(9, n)
-            res[m, 0] = txc.min(axis=0)
-            res[m, 1] = tyc.min(axis=0)
-            res[m, 2] = txc.max(axis=0)
-            res[m, 3] = tyc.max(axis=0)
-        vals = np.empty(len(res), dtype=object)
-        vals[:] = [list(map(float, r)) for r in res]
-        out.iloc[np.flatnonzero(valid.to_numpy())] = vals
-        return out
-
-    return _reproject
-
-
 def _src_windows(
-    src_spec: RasterSpec, dst_spec: RasterSpec, chunksize: int, halo: int
+    src_spec: RasterSpec,
+    dst_spec: RasterSpec,
+    chunksize: int,
+    halo: int,
+    ids: np.ndarray | None = None,
 ) -> pd.DataFrame:
-    """The dst tile table (``_DST_TILES_SCHEMA``) built with vectorized numpy
-    on the driver: each dst tile and the outward-rounded, halo-padded source
-    pixel window ``[sr0, sr1) x [sc0, sc1)`` it gathers from. Same arithmetic
-    as the executor-side path (1e-9 outward rounding) so results are
-    identical. Serves small warp grids and the one window of an XYZ tile."""
+    """The dst tile table (``_DST_TILES_SCHEMA``) in vectorized numpy: each
+    dst tile and the outward-rounded, halo-padded source pixel window
+    ``[sr0, sr1) x [sc0, sc1)`` it gathers from. ``ids`` are flat dst tile
+    ids (``dty * n_tx + dtx``); None means the whole grid. The one window
+    kernel of every warp: run once on the driver for a small grid and a
+    served XYZ tile, per Arrow batch of ids for a large grid."""
     dh, dw = dst_spec.shape
-    n_ty = -(-dh // chunksize)
     n_tx = -(-dw // chunksize)
+    if ids is None:
+        ids = np.arange(-(-dh // chunksize) * n_tx)
     sxres, syres = src_spec.resolutions_xy
     dxres, dyres = dst_spec.resolutions_xy
     dminx, _, _, dmaxy = dst_spec.bounds
     sminx, _, _, smaxy = src_spec.bounds
 
-    dty, dtx = np.meshgrid(np.arange(n_ty), np.arange(n_tx), indexing="ij")
-    dty = dty.ravel()
-    dtx = dtx.ravel()
+    dty, dtx = np.divmod(np.asarray(ids, dtype="int64"), n_tx)
     dr0 = dty * chunksize
     dc0 = dtx * chunksize
     th = np.minimum(chunksize, dh - dr0)
     tw = np.minimum(chunksize, dw - dc0)
-    # dst tile bounds → src CRS via the same 4-corner min/max prepare's
-    # with_out_bounds kernel uses
+    # dst tile bounds → src CRS
     bminx = dminx + dc0 * dxres
     bminy = dmaxy - (dr0 + th) * dyres
     bmaxx = dminx + (dc0 + tw) * dxres
@@ -359,14 +313,14 @@ def reproject_tiles(
     overlap (+halo), groupBy dst tile assembling the padded source block,
     interpolate. One shuffle (the groupBy); every kernel is O(tile²).
 
-    The dst grid has two physical strategies:
+    The dst grid is one numpy kernel (``_src_windows``) on either of two
+    substrates:
 
-    - ``<= grid_on_driver_max`` tiles: vectorized numpy on the driver
-      (zero Spark jobs, no Python-worker spin-up). One XYZ tile or a
-      single-raster resample is 1-few hundred tiles; launching an
-      Arrow-batched reprojection job for that costs ~5s of pure overhead.
-    - larger: EXECUTOR-SIDE ``sequence``+``explode`` + the same
-      Arrow-batched 4-corner reprojection kernel prepare uses — a
+    - ``<= grid_on_driver_max`` tiles: on the driver (zero Spark jobs, no
+      Python-worker spin-up). One XYZ tile or a single-raster resample is
+      1-few hundred tiles; launching an Arrow-batched job for that costs
+      ~5s of pure overhead.
+    - larger: per Arrow batch of flat tile ids from ``spark.range`` — a
       full-raster cross-CRS reproject has millions of dst tiles, so a
       driver loop would serialize the job before it starts (plan-guarded by
       tests/test_plan_quality.py).
@@ -374,66 +328,19 @@ def reproject_tiles(
     meth = _interp_method(method)
     spark = tiles.sparkSession
     dh, dw = dst_spec.shape
-    n_ty = -(-dh // chunksize)
-    n_tx = -(-dw // chunksize)
+    n_tiles = -(-dh // chunksize) * -(-dw // chunksize)
     sxres, syres = src_spec.resolutions_xy
     dxres, dyres = dst_spec.resolutions_xy
-    dminx, _, _, dmaxy = dst_spec.bounds
-    sminx, _, _, smaxy = src_spec.bounds
 
-    if n_ty * n_tx <= grid_on_driver_max:
+    if n_tiles <= grid_on_driver_max:
         dst_tiles = spark.createDataFrame(
             _src_windows(src_spec, dst_spec, chunksize, halo), schema=_DST_TILES_SCHEMA
         )
     else:
-        reproj = _bounds_9pt_udf(src_spec.epsg)
-
-        # destination tile table with its source-pixel footprint — all column
-        # arithmetic plus one vectorized reprojection UDF; nothing iterates on
-        # the driver regardless of grid size
-        dst_grid = (
-            spark.range(1)
-            .select(F.explode(F.sequence(F.lit(0), F.lit(n_ty - 1))).alias("dty"))
-            .select("dty", F.explode(F.sequence(F.lit(0), F.lit(n_tx - 1))).alias("dtx"))
-            .select(
-                "dty",
-                "dtx",
-                (F.col("dty") * chunksize).cast("int").alias("dr0"),
-                (F.col("dtx") * chunksize).cast("int").alias("dc0"),
-            )
-            .select(
-                "*",
-                F.least(F.lit(chunksize), F.lit(dh) - F.col("dr0")).cast("int").alias("dh"),
-                F.least(F.lit(chunksize), F.lit(dw) - F.col("dc0")).cast("int").alias("dw"),
-            )
-            .select(
-                "*",
-                F.array(
-                    F.lit(dminx) + F.col("dc0") * F.lit(dxres),
-                    F.lit(dmaxy) - (F.col("dr0") + F.col("dh")) * F.lit(dyres),
-                    F.lit(dminx) + (F.col("dc0") + F.col("dw")) * F.lit(dxres),
-                    F.lit(dmaxy) - F.col("dr0") * F.lit(dyres),
-                ).alias("dbounds"),
-            )
-            .withColumn("sb", reproj(F.col("dbounds"), F.lit(int(dst_spec.epsg))))
-        )
-        # fractional source window (raster_spec.window_from_bounds as columns),
-        # outward-rounded with the same 1e-9 epsilon, then ± halo
-        col_off = (F.col("sb")[0] - F.lit(sminx)) / F.lit(sxres)
-        row_off = (F.lit(smaxy) - F.col("sb")[3]) / F.lit(syres)
-        height = (F.col("sb")[3] - F.col("sb")[1]) / F.lit(syres)
-        width = (F.col("sb")[2] - F.col("sb")[0]) / F.lit(sxres)
-        dst_tiles = dst_grid.select(
-            "dty",
-            "dtx",
-            "dr0",
-            "dc0",
-            "dh",
-            "dw",
-            (F.floor(row_off + 1e-9) - halo).cast("int").alias("sr0"),
-            (F.floor(col_off + 1e-9) - halo).cast("int").alias("sc0"),
-            (F.ceil(row_off + height - 1e-9) + halo).cast("int").alias("sr1"),
-            (F.ceil(col_off + width - 1e-9) + halo).cast("int").alias("sc1"),
+        dst_tiles = _per_batch(
+            spark.range(n_tiles),
+            lambda pdf: _src_windows(src_spec, dst_spec, chunksize, halo, pdf["id"].to_numpy()),
+            _DST_TILES_SCHEMA,
         )
 
     # source tiles ⋈ dst tiles on pixel-window overlap. Two physical
@@ -452,7 +359,7 @@ def reproject_tiles(
     #   Pairs dedupe via the canonical-bin trick (keep the pair only in
     #   the top-left bin of the window intersection), not a distinct.
     overlap = _window_overlap(F.col("sr0"), F.col("sc0"), F.col("sr1"), F.col("sc1"))
-    if n_ty * n_tx <= broadcast_dst_max:
+    if n_tiles <= broadcast_dst_max:
         joined = tiles.join(F.broadcast(dst_tiles), overlap)
     else:
         if bin_px is None:
@@ -527,8 +434,6 @@ def reproject_tiles(
         joined = tiles.join(
             pairs, ["item_idx", "band_idx", "row_off", "col_off", "tile_h", "tile_w"]
         )
-
-    from stackstac_spark.functions.proj import install_user_crs, user_crs_snapshot
 
     _crs_snap = user_crs_snapshot()
 
@@ -620,7 +525,6 @@ def xyztile_mosaic(
     4. the fold stops once the tile has no invalid pixels, so the items
        underneath are never warped.
     """
-    from stackstac_spark.functions.proj import install_user_crs, user_crs_snapshot
     from stackstac_spark.operators.mosaic import TILE_MOSAIC_SCHEMA, _mosaic_fold
 
     meth = _interp_method(method)

@@ -46,12 +46,7 @@ from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
-from stackstac_spark.functions.proj import (
-    install_user_crs,
-    reproject_bounds,
-    transform_xy,
-    user_crs_snapshot,
-)
+from stackstac_spark.functions.proj import _per_batch, reproject_bounds, transform_xy
 from stackstac_spark.raster_spec import Bbox, RasterSpec, snapped_bounds, union_bounds
 
 
@@ -407,20 +402,6 @@ def finish(
     if snap_bounds:
         bounds = snapped_bounds(bounds, res_xy)
     return RasterSpec(out_epsg, bounds, res_xy)
-
-
-def _per_batch(df: DataFrame, fn, schema) -> DataFrame:
-    """``df.mapInPandas`` of ``fn`` per Arrow batch, with the driver's
-    registered CRSs installed in the executor process first (worker
-    processes import functions/proj.py fresh)."""
-    crs = user_crs_snapshot()
-
-    def run(batches):
-        install_user_crs(crs)
-        for pdf in batches:
-            yield fn(pdf)
-
-    return df.mapInPandas(run, schema)
 
 
 # --- main entry --------------------------------------------------------------

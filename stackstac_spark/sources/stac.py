@@ -206,6 +206,31 @@ def _item_to_rows(it: dict) -> tuple[tuple, list[tuple]]:
     return item_row, asset_rows
 
 
+def _parse_catalog(df: DataFrame, records) -> tuple[DataFrame, DataFrame]:
+    """(items_df, assets_df) from a catalog DataFrame: ``records(pdf)`` turns
+    each Arrow batch into STAC item dicts, which go through
+    ``_item_to_rows`` in one ``mapInPandas`` per output table. The one
+    parse of every distributed ingest path (JSONL, stac-geoparquet, the
+    streaming sink)."""
+    import pandas as pd
+
+    def parse(schema, rows_of):
+        def run(batches):
+            for pdf in batches:
+                rows = [r for it in records(pdf) for r in rows_of(*_item_to_rows(it))]
+                yield pd.DataFrame(rows, columns=[f.name for f in schema.fields])
+
+        return df.mapInPandas(run, schema)
+
+    items_df = parse(ITEM_SCHEMA, lambda item, assets: [item])
+    return items_df, parse(ASSET_SCHEMA, lambda item, assets: assets)
+
+
+def _json_records(pdf):
+    """The item dicts of a batch of JSONL lines (a ``value`` column)."""
+    return (json.loads(s) for s in pdf["value"] if s.strip())
+
+
 def items_from_jsonl(spark: SparkSession, path: str) -> tuple[DataFrame, DataFrame]:
     """Distributed STAC ingest: a directory/glob of item JSONL on (object)
     storage → (items_df, assets_df), same schemas as ``items_to_dataframes``.
@@ -214,24 +239,7 @@ def items_from_jsonl(spark: SparkSession, path: str) -> tuple[DataFrame, DataFra
     parallelizes across the cluster; normalization runs in Arrow-batched
     ``mapInPandas`` with the exact same kernel as the driver-side path.
     """
-    import pandas as pd
-
-    lines = spark.read.text(path)
-
-    def to_items(batches):
-        for pdf in batches:
-            rows = [_item_to_rows(json.loads(s))[0] for s in pdf["value"] if s.strip()]
-            yield pd.DataFrame(rows, columns=[f.name for f in ITEM_SCHEMA.fields])
-
-    def to_assets(batches):
-        for pdf in batches:
-            out = []
-            for s in pdf["value"]:
-                if s.strip():
-                    out.extend(_item_to_rows(json.loads(s))[1])
-            yield pd.DataFrame(out, columns=[f.name for f in ASSET_SCHEMA.fields])
-
-    return lines.mapInPandas(to_items, ITEM_SCHEMA), lines.mapInPandas(to_assets, ASSET_SCHEMA)
+    return _parse_catalog(spark.read.text(path), _json_records)
 
 
 # -- STAC-GeoParquet ---------------------------------------------------------
@@ -317,29 +325,11 @@ def items_from_geoparquet(spark: SparkSession, path: str) -> tuple[DataFrame, Da
     same schemas as ``items_to_dataframes`` (shared ``_item_to_rows``
     kernel). `geometry` (WKB) and `links` are dropped BEFORE the scan, so
     parquet column pruning never reads those bytes."""
-    import pandas as pd
-
     df = spark.read.parquet(path)
     drop = [c for c in ("geometry", "links") if c in df.columns]
     if drop:
         df = df.drop(*drop)
-
-    def to_items(batches):
-        for pdf in batches:
-            rows = [
-                _item_to_rows(_gpq_record_to_item(rec))[0]
-                for rec in pdf.to_dict("records")
-            ]
-            yield pd.DataFrame(rows, columns=[f.name for f in ITEM_SCHEMA.fields])
-
-    def to_assets(batches):
-        for pdf in batches:
-            out = []
-            for rec in pdf.to_dict("records"):
-                out.extend(_item_to_rows(_gpq_record_to_item(rec))[1])
-            yield pd.DataFrame(out, columns=[f.name for f in ASSET_SCHEMA.fields])
-
-    return df.mapInPandas(to_items, ITEM_SCHEMA), df.mapInPandas(to_assets, ASSET_SCHEMA)
+    return _parse_catalog(df, lambda pdf: map(_gpq_record_to_item, pdf.to_dict("records")))
 
 
 def items_to_geoparquet(items, path: str) -> None:

@@ -310,7 +310,7 @@ def incremental_stack_sink(
     """
     from stackstac_spark.grid import join_assets_to_tiles, tile_grid
     from stackstac_spark.sources.raster import scan_tiles
-    from stackstac_spark.sources.stac import items_to_dataframes
+    from stackstac_spark.sources.stac import _json_records, _parse_catalog
 
     # bound each micro-batch: process_batch collects the batch's item JSON
     # to the driver, so an unbounded availableNow backfill over a huge
@@ -320,35 +320,6 @@ def incremental_stack_sink(
         .option("maxFilesPerTrigger", max_files_per_trigger)
         .load(jsonl_path)
     )
-
-    def _distributed_normalize(batch_df: DataFrame):
-        """mapInPandas parse for oversized batches — same kernel as the
-        JSONL catalog source, bounded driver memory."""
-        import json as _json
-
-        import pandas as pd
-
-        from stackstac_spark.sources.stac import ASSET_SCHEMA, ITEM_SCHEMA, _item_to_rows
-
-        def to_items(batches):
-            for pdf in batches:
-                rows = [
-                    _item_to_rows(_json.loads(s))[0] for s in pdf["value"] if s.strip()
-                ]
-                yield pd.DataFrame(rows, columns=[f.name for f in ITEM_SCHEMA.fields])
-
-        def to_assets(batches):
-            for pdf in batches:
-                out = []
-                for s in pdf["value"]:
-                    if s.strip():
-                        out.extend(_item_to_rows(_json.loads(s))[1])
-                yield pd.DataFrame(out, columns=[f.name for f in ASSET_SCHEMA.fields])
-
-        return (
-            batch_df.mapInPandas(to_items, ITEM_SCHEMA),
-            batch_df.mapInPandas(to_assets, ASSET_SCHEMA),
-        )
 
     # maxFilesPerTrigger bounds files, not lines: ONE giant backfill JSONL
     # could still be a single multi-million-line batch, which the driver-side
@@ -367,7 +338,7 @@ def incremental_stack_sink(
         if not head:
             return
         if len(head) > max_driver_lines:
-            items_df, assets_df = _distributed_normalize(batch_df)
+            items_df, assets_df = _parse_catalog(batch_df, _json_records)
             from stackstac_spark.prepare import prepare
 
             prep = prepare(

@@ -95,21 +95,47 @@ def test_reproject_array_returns_stack(st):
     assert np.isfinite(dense).any()
 
 
-def test_xyztile_of_array(st):
-    # a z=22 tile inside the stack footprint vs one far away
+def _center_tile(st, z):
+    """(x, y) of the zoom-z OSM tile holding the stack's center."""
     from stackstac_spark.functions.proj import reproject_bounds
-
-    b = reproject_bounds(st.spec.bounds, st.spec.epsg, 3857)
     from stackstac_spark.operators.warp import WEB_MERCATOR_EXTENT as EXT
 
+    b = reproject_bounds(st.spec.bounds, st.spec.epsg, 3857)
     cx, cy = (b[0] + b[2]) / 2, (b[1] + b[3]) / 2
-    n = 2**22
-    tx = int((cx + EXT) / (2 * EXT) * n)
-    ty = int((EXT - cy) / (2 * EXT) * n)
+    n = 2**z
+    return int((cx + EXT) / (2 * EXT) * n), int((EXT - cy) / (2 * EXT) * n)
+
+
+def test_xyztile_of_array(st):
+    # a z=22 tile inside the stack footprint vs one far away
+    tx, ty = _center_tile(st, 22)
     tile = s.xyztile_of_array(st, 22, tx, ty, tilesize=64)
     assert tile is not None and tile.spec.epsg == 3857
     assert tile.spec.shape == (64, 64)
     assert s.xyztile_of_array(st, 5, 0, 0) is None  # far away -> no overlap
+
+
+def test_warp_of_float32_stack_computes_like_float64(spark, st):
+    """Warp output is float64 whatever the stack's dtype, and the returned
+    stack says so: a float32 stack's ``reproject_array`` and
+    ``xyztile_of_array`` compute like the float64 stack's, within float32
+    rounding."""
+    items = [
+        make_item(0, "2024-01-05T00:00:00Z", (0.0, 0.0, 16.0, 16.0)),
+        make_item(1, "2024-02-05T00:00:00Z", (0.0, 0.0, 16.0, 16.0)),
+    ]
+    st32 = s.stack(spark, items, assets=["red"], chunksize=16, dtype="float32")
+    dst = RasterSpec(st.spec.epsg, st.spec.bounds, (2.0, 2.0))
+    tx, ty = _center_tile(st, 22)
+    for warp in (
+        lambda a: s.reproject_array(a, dst, method="linear"),
+        lambda a: s.xyztile_of_array(a, 22, tx, ty, tilesize=64),
+    ):
+        w64, w32 = warp(st), warp(st32)
+        assert w32.dtype == "float64"
+        a64, a32 = w64.compute(), w32.compute()
+        assert a32.shape == a64.shape and np.isfinite(a64).any()
+        np.testing.assert_allclose(a32, a64, rtol=4 * np.finfo(np.float32).eps, equal_nan=True)
 
 
 def test_server_stats_lists_registered_layer(st):

@@ -88,10 +88,11 @@ def test_raster_scan_path_has_no_shuffle(spark):
 
 
 def test_warp_dst_grid_is_generated_executor_side(spark):
-    """The destination tile grid of a reproject must come from
-    sequence+explode on executors, not a driver-side Python loop: a
-    full-raster cross-CRS warp has millions of dst tiles, and a driver loop
-    would both OOM and serialize the job before it starts."""
+    """The destination tile grid of a reproject must come from executors
+    (the window kernel per Arrow batch of ``spark.range`` ids), not a
+    driver-side Python loop: a full-raster cross-CRS warp has millions of
+    dst tiles, and a driver loop would both OOM and serialize the job
+    before it starts."""
     from stackstac_spark.operators.warp import reproject_tiles
     from stackstac_spark.raster_spec import RasterSpec
     from stackstac_spark.stack import stack as _stack
@@ -107,9 +108,11 @@ def test_warp_dst_grid_is_generated_executor_side(spark):
     # grid_on_driver_max=0 forces the large-grid strategy so the guard keeps
     # checking the path a million-tile reproject would take
     plan = _plan(reproject_tiles(st.tiles, st.spec, dst, chunksize=16, grid_on_driver_max=0))
-    # sequence() constant-folds to a literal array, so match the Generate
-    # nodes producing the dst tile coordinates
-    assert "Generate explode" in plan and "[dty" in plan and "[dtx" in plan
+    # the dst tile table is a Python stage directly over a Range
+    lines = plan.splitlines()
+    grid = [i for i, ln in enumerate(lines) if "MapInPandas" in ln and "[dty" in ln and "dtx" in ln]
+    assert len(grid) == 1, plan
+    assert "Range (" in lines[grid[0] + 1], plan
     # the grid must NOT arrive as a driver-materialized LocalTableScan
     assert "LocalTableScan [dty" not in plan
     # and the grid side still reaches the overlap join as a broadcast

@@ -171,11 +171,7 @@ def test_tile_server_end_to_end(spark):
 
 
 def test_coords_tables(spark):
-    from stackstac_spark.operators.coords import (
-        accumulate_metadata,
-        band_coords_allsame,
-        xy_label_tables,
-    )
+    from stackstac_spark.operators.coords import accumulate_metadata, xy_label_tables
     from stackstac_spark.prepare import prepare
     from stackstac_spark.sources.stac import items_to_dataframes
 
@@ -327,6 +323,44 @@ def test_reproject_curvature_midedge_no_nan(spark):
         )
         n_nan_inside = int(np.isnan(dense[inside]).sum())
         assert n_nan_inside == 0, f"{n_nan_inside} NaN pixels inside the raster"
+
+
+@pytest.mark.parametrize(
+    "src, dst",
+    [
+        # 70x45 px at chunksize 16: 5x3 tiles, the last column 6 px wide and
+        # the last row 13 px high
+        (
+            RasterSpec(32613, (0.0, 0.0, 64.0, 64.0), (1.0, 1.0)),
+            RasterSpec(32613, (-3.0, 10.0, 67.0, 55.0), (1.0, 1.0)),
+        ),
+        # UTM -> 4326 across the zone's central meridian: 50x56 px, 4x4 tiles
+        (
+            RasterSpec(32633, (200000.0, 4900000.0, 800000.0, 5000000.0), (1000.0, 1000.0)),
+            RasterSpec(4326, (10.0, 44.0, 20.0, 45.4), (0.2, 0.025)),
+        ),
+    ],
+    ids=["same_crs", "utm_to_4326"],
+)
+def test_src_windows_batches_equal_whole_grid(src, dst):
+    """The window kernel over uneven batches of flat dst tile ids (as the
+    large-grid path runs it per Arrow batch), concatenated, is the
+    whole-grid table the driver path builds."""
+    import pandas as pd
+
+    from stackstac_spark.operators.warp import _src_windows
+
+    chunk = 16
+    whole = _src_windows(src, dst, chunk, halo=2)
+    dh, dw = dst.shape
+    n_ty, n_tx = -(-dh // chunk), -(-dw // chunk)
+    assert len(whole) == n_ty * n_tx >= 12
+    assert dh % chunk and dw % chunk  # partial last row and column
+    assert list(whole.dty * n_tx + whole.dtx) == list(range(n_ty * n_tx))
+    ids = np.arange(n_ty * n_tx)
+    cuts = [0, 0, 1, 4, 5, 11, len(ids)]  # one empty batch, the rest uneven
+    parts = [_src_windows(src, dst, chunk, 2, ids[a:b]) for a, b in zip(cuts, cuts[1:])]
+    pd.testing.assert_frame_equal(pd.concat(parts, ignore_index=True), whole)
 
 
 def test_interp_tile_cubic_keys_vs_direct():
