@@ -78,7 +78,7 @@ def reproject_array(arr, spec, method: str = "nearest", chunksize: int = 256):
     warped = reproject_tiles(
         arr.tiles, arr.spec, spec, chunksize=chunksize, method=method, dtype=arr.dtype
     )
-    return dataclasses.replace(arr, tiles=warped, spec=spec, dtype="float64")
+    return dataclasses.replace(arr, source=warped, spec=spec, dtype="float64")
 
 
 def xyztile_of_array(

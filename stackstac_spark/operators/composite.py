@@ -7,8 +7,8 @@ Reference usages these mirror:
 - NDVI ``(nir - red) / (nir + red)`` (README.md:53-54)
 - display percentile range (show.py:484-497)
 
-All are single hash aggregates (partial + final) or a pivot; the band
-arithmetic deliberately pivots bands to columns instead of self-joining on
+All are single hash aggregates (partial + final); the band arithmetic
+deliberately pivots bands to columns instead of self-joining on
 (time, y, x) — one shuffle instead of a join of two huge sides.
 """
 
@@ -716,8 +716,10 @@ def band_pivot(
     """Pivot band_idx → one column per band, per (item_idx, row, col).
 
     The preferred physical plan for band arithmetic (NDVI etc.): one
-    groupBy-pivot shuffle with map-side partial aggregation, instead of a
-    self-join of the pixel table against itself.
+    hash aggregate — one ``first(value where band_idx = i)`` per band, so
+    one exchange with map-side partial aggregation — instead of a self-join
+    of the pixel table against itself. (``pivot().agg(first)`` plans two
+    aggregates and two exchanges of the pixel rows.)
 
     ``band_idxs`` gives the tile band_idx VALUE for each name; default is
     positional (a full stack). Pass ``stack.band_idxs`` for a stack that
@@ -729,16 +731,11 @@ def band_pivot(
         raise ValueError(
             f"band_idxs has {len(idxs)} entries for {len(band_names)} band names"
         )
-    return (
-        pixels.groupBy("item_idx", "row", "col")
-        .pivot("band_idx", idxs)
-        .agg(F.first("value"))
-        .select(
-            "item_idx",
-            "row",
-            "col",
-            *[F.col(str(i)).alias(n) for i, n in zip(idxs, band_names)],
-        )
+    return pixels.groupBy("item_idx", "row", "col").agg(
+        *[
+            F.first(F.when(F.col("band_idx") == i, F.col("value")), ignorenulls=True).alias(n)
+            for i, n in zip(idxs, band_names)
+        ]
     )
 
 

@@ -87,7 +87,7 @@ def read_tiles(spark, path: str):
     )
     fill = meta.get("fill_value")
     return RasterStack(
-        tiles=spark.read.parquet(f"{path}/tiles"),
+        source=spark.read.parquet(f"{path}/tiles"),
         spec=spec,
         asset_ids=list(meta["asset_ids"]),
         items_df=spark.read.parquet(f"{path}/items"),

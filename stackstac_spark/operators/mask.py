@@ -11,12 +11,18 @@ Physical strategy (100 TB shape):
   the stack fill). No shuffle, no join — it fuses into whatever scan or
   warp stage precedes it, and downstream sparse ops (``explode_pixels``
   with ``drop_fill``) simply never materialize the masked pixels.
-- ``mask_band_tiles`` needs the mask band's payload next to each data
-  band's payload: ONE hash equi-join on the tile key
-  (item_idx, tile_y, tile_x) — the mask side is 1/n_bands of the stack and
-  co-keyed, so this is a plain co-partitioned join (AQE broadcasts it when
-  the AOI is small), then the same map-only elementwise kernel. Never a
-  pixel-level join: payloads meet once per TILE, not once per pixel.
+- ``RasterStack.mask_band`` on a stack still read from its plan never
+  joins payloads: the mask band's windows join the read plan's data rows
+  (metadata), and the scan reads each data window with its mask window
+  (sources/raster.py::ReadPlan.masked_by), with the keep test from
+  :func:`mask_test`.
+- ``mask_band_tiles`` masks tiles that exist already (a warp, a checkpoint,
+  a second mask band): the mask band's payload meets each data band's
+  payload in ONE hash equi-join on the tile key (item_idx, tile_y,
+  tile_x) — the mask side is 1/n_bands of the stack and co-keyed, so this
+  is a plain co-partitioned join (AQE broadcasts it when the AOI is
+  small), then the same map-only elementwise kernel. Never a pixel-level
+  join: payloads meet once per TILE, not once per pixel.
 """
 
 from __future__ import annotations
@@ -76,6 +82,21 @@ def where_tiles(
     return tiles.mapInPandas(apply, TILE_SCHEMA)
 
 
+def mask_test(
+    keep: Sequence[float] | MaskFn, other: float, dtype: str
+) -> tuple[MaskFn, np.ndarray]:
+    """``(keep_fn, other)`` for a mask band of a ``dtype`` stack:
+    ``keep_fn`` maps a mask block to the pixels to keep — ``keep`` itself
+    when callable, else membership in the value list cast to ``dtype`` —
+    and ``other`` is the masked pixels' value as a ``dtype`` scalar."""
+    _check_other(other, dtype)
+    other_v = np.asarray(other, dtype=dtype)
+    if callable(keep):
+        return keep, other_v
+    keep_vals = np.asarray(list(keep), dtype=dtype)
+    return (lambda m: np.isin(m, keep_vals)), other_v
+
+
 def mask_band_tiles(
     tiles: DataFrame,
     mask_band_idx: int,
@@ -94,15 +115,7 @@ def mask_band_tiles(
     dropped; data tiles with no mask tile are dropped too (inner join —
     a missing mask means unknown classification, which is not "keep").
     """
-    _check_other(other, dtype)
-    if callable(keep):
-        keep_fn: MaskFn = keep  # type: ignore[assignment]
-    else:
-        keep_vals = np.asarray(list(keep), dtype=dtype)
-
-        def keep_fn(m: np.ndarray) -> np.ndarray:
-            return np.isin(m, keep_vals)
-
+    keep_fn, other_v = mask_test(keep, other, dtype)
     data = tiles.filter(F.col("band_idx") != mask_band_idx)
     mask = tiles.filter(F.col("band_idx") == mask_band_idx).select(
         "item_idx",
@@ -124,7 +137,7 @@ def mask_band_tiles(
                 m = np.frombuffer(row.mask_data, dtype=dtype).reshape(
                     row.tile_h, row.tile_w
                 )
-                masked = np.where(keep_fn(m), arr, np.asarray(other, dtype=dtype))
+                masked = np.where(keep_fn(m), arr, other_v)
                 rows.append(
                     tuple(getattr(row, c) for c in out_cols[:-1])
                     + (masked.astype(dtype).tobytes(),)

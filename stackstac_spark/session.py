@@ -97,25 +97,35 @@ def local_df(spark: SparkSession, rows, schema):
     and Catalyst can't constant-fold into it. Routing through pandas+Arrow
     yields a LocalRelation: JVM-local bytes, zero Python round-trips, and
     broadcast-able without running a job. Falls back to the plain path for
-    types the Arrow converter rejects.
+    types the Arrow converter rejects. Zero rows become an empty
+    LocalRelation built in the JVM: both Python routes give an RDD-backed
+    frame for an empty list.
     """
-    from pyspark.sql.types import StructType
+    from pyspark.sql import DataFrame
+    from pyspark.sql.types import StructType, _parse_datatype_string
 
-    if rows:
-        try:
-            import pandas as pd
+    if not rows:
+        if isinstance(schema, str):
+            schema = _parse_datatype_string(schema)
+        jspark = spark._jsparkSession
+        jdf = jspark.createDataFrame(
+            spark._jvm.java.util.ArrayList(), jspark.parseDataType(schema.json())
+        )
+        return DataFrame(jdf, spark)
+    try:
+        import pandas as pd
 
-            names = (
-                schema.fieldNames()
-                if isinstance(schema, StructType)
-                else [f.split()[0] for f in str(schema).split(",")]
-            )
-            pdf = pd.DataFrame(list(rows), columns=names)
-            df = spark.createDataFrame(pdf, schema)
-            # verify we actually got a LocalRelation (Arrow may silently
-            # fall back); if not, the plain path is no worse
-            if "LocalRelation" in df._jdf.queryExecution().optimizedPlan().toString():
-                return df
-        except Exception:
-            pass
+        names = (
+            schema.fieldNames()
+            if isinstance(schema, StructType)
+            else [f.split()[0] for f in str(schema).split(",")]
+        )
+        pdf = pd.DataFrame(list(rows), columns=names)
+        df = spark.createDataFrame(pdf, schema)
+        # verify we actually got a LocalRelation (Arrow may silently
+        # fall back); if not, the plain path is no worse
+        if "LocalRelation" in df._jdf.queryExecution().optimizedPlan().toString():
+            return df
+    except Exception:
+        pass
     return spark.createDataFrame(rows, schema)

@@ -1,11 +1,16 @@
-"""The leaf raster scan: (asset × tile) rows → dense tile blocks.
+"""The leaf raster scan: the read plan's (asset × tile) rows → tile blocks
+or pixel rows.
 
 Spark re-expression of the reference's ``fetch_raster_window``
 (to_dask.py:157-205) + ``AutoParallelRioReader.read`` (rio_reader.py:382-429):
-each Arrow batch of (asset, tile) pairs is mapped to tile rows whose ``data``
-is the ``tile_h × tile_w`` float64 block — windowed-read from the source,
-masked, rescaled (``value * scale + offset``), and filled with ``fill_value``
-outside the asset's footprint.
+each Arrow batch of (asset, tile) pairs of a :class:`ReadPlan` is mapped to
+tile rows whose ``data`` is the ``tile_h × tile_w`` block in the stack's
+dtype — windowed-read from the source, masked, rescaled
+(``value * scale + offset``), and filled with ``fill_value`` outside the
+asset's footprint. The same kernel reads a mask band's window beside each
+data window and applies the keep test, and for the pixel view it emits the
+pixel rows itself, so a masked pixel view is one Python pass from COG
+window to pixel row.
 
 Readers:
 
@@ -30,6 +35,8 @@ instead of failing the job.
 from __future__ import annotations
 
 import re
+from dataclasses import dataclass, field, replace
+from functools import cached_property
 from typing import Iterator
 
 import numpy as np
@@ -58,7 +65,7 @@ TILE_SCHEMA = T.StructType(
         T.StructField("col_off", T.IntegerType()),
         T.StructField("tile_h", T.IntegerType()),
         T.StructField("tile_w", T.IntegerType()),
-        T.StructField("data", T.BinaryType()),  # float64 C-order (tile_h, tile_w)
+        T.StructField("data", T.BinaryType()),  # dtype C-order (tile_h, tile_w)
     ]
 )
 
@@ -606,11 +613,13 @@ def make_scan_udf(
     overview_mode: str = "exact",
     overview_acc=None,
 ):
-    """Build the mapInPandas kernel for the scan.
-
-    Input batches carry: item_idx, band_idx, url, minx..maxy (asset bounds in
-    output CRS), scale, offset, tile_y, tile_x, row_off, col_off, tile_h,
-    tile_w. Output: TILE_SCHEMA rows; ``data`` holds ``dtype`` C-order bytes.
+    """Check the scan options and build the scan's window read,
+    ``read(url, bounds, scale, offset, t) -> block``: the
+    ``(t.tile_h, t.tile_w)`` block of the asset at ``url`` (``bounds`` in
+    the output CRS) on the output tile at ``(t.row_off, t.col_off)``, in
+    ``dtype`` — windowed-read, rescaled (``value * scale + offset``) and
+    ``fill_value`` outside the asset's footprint and where the source is
+    masked. :class:`ReadPlan` runs it per plan row inside ``mapInPandas``.
 
     ``fill_value`` must be castable to ``dtype`` (the reference's check at
     to_dask.py:39-43).
@@ -650,89 +659,53 @@ def make_scan_udf(
                 f"dtype {dtype} (would become {cast!r})"
             )
     genv = normalize_gdal_env(gdal_env)
-    from stackstac_spark.functions.proj import install_user_crs, user_crs_snapshot
 
-    _crs_snap = user_crs_snapshot()
+    def read(url: str, bounds: tuple, scale: float, offset: float, t) -> np.ndarray:
+        tile = np.full((t.tile_h, t.tile_w), fill_value, dtype=np_dtype)
+        # asset window on the global grid (to_dask.py:116-124 +
+        # windows.intersect at to_dask.py:183); the outward epsilon
+        # rounding lives in ONE place — raster_spec — because the
+        # scan and the tile grid must agree to the pixel
+        ar0, ac0, ah, aw = spec.pixel_window_from_bounds(bounds)
+        r0 = max(t.row_off, ar0)
+        r1 = min(t.row_off + t.tile_h, ar0 + ah)
+        c0 = max(t.col_off, ac0)
+        c1 = min(t.col_off + t.tile_w, ac0 + aw)
+        if r1 <= r0 or c1 <= c0:
+            return tile
+        try:
+            if url.startswith("fake://"):
+                rr, cc = np.meshgrid(np.arange(r0, r1), np.arange(c0, c1), indexing="ij")
+                block = fake_pixel_values(url, rr, cc)
+            elif _HAVE_RASTERIO:
+                block = _read_real_window(url, spec, r0, r1, c0, c1, resampling, genv)
+            else:
+                # read the counter through the module: cloudpickle ships
+                # this closure with a BY-VALUE snapshot of plain globals,
+                # so a bare name here would stay frozen at 0 on workers
+                # while _select_overview increments the real module global
+                from stackstac_spark.sources import raster as _rmod
 
-    def scan(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        install_user_crs(_crs_snap)
-        for pdf in batches:
-            out_rows = []
-            for row in pdf.itertuples(index=False):
-                tile = np.full((row.tile_h, row.tile_w), fill_value, dtype=np_dtype)
-                # asset window on the global grid (to_dask.py:116-124 +
-                # windows.intersect at to_dask.py:183); the outward epsilon
-                # rounding lives in ONE place — raster_spec — because the
-                # scan and the tile grid must agree to the pixel
-                ar0, ac0, ah, aw = spec.pixel_window_from_bounds(
-                    (row.minx, row.miny, row.maxx, row.maxy)
+                before_ov = _rmod.FALLBACK_OVERVIEW_READS
+                block = _read_fallback_window(
+                    url, spec, r0, r1, c0, c1, resampling, overview_mode=overview_mode
                 )
-                ar1, ac1 = ar0 + ah, ac0 + aw
-                r0 = max(row.row_off, ar0)
-                r1 = min(row.row_off + row.tile_h, ar1)
-                c0 = max(row.col_off, ac0)
-                c1 = min(row.col_off + row.tile_w, ac1)
-                if r1 > r0 and c1 > c0:
-                    try:
-                        if row.url.startswith("fake://"):
-                            rr, cc = np.meshgrid(
-                                np.arange(r0, r1), np.arange(c0, c1), indexing="ij"
-                            )
-                            block = fake_pixel_values(row.url, rr, cc)
-                        elif _HAVE_RASTERIO:
-                            block = _read_real_window(
-                                row.url, spec, r0, r1, c0, c1, resampling, genv
-                            )
-                        else:
-                            # read the counter through the module: cloudpickle
-                            # ships this closure with a BY-VALUE snapshot of
-                            # plain globals, so a bare name here would stay
-                            # frozen at 0 on workers while _select_overview
-                            # increments the real module global
-                            from stackstac_spark.sources import raster as _rmod
+                if overview_acc is not None and _rmod.FALLBACK_OVERVIEW_READS > before_ov:
+                    overview_acc.add(1)
+            block = block * scale + offset
+            sub = tile[r0 - t.row_off : r1 - t.row_off, c0 - t.col_off : c1 - t.col_off]
+            valid = ~np.isnan(block)
+            # masked cells keep fill; valid cells cast to the output dtype
+            # on assignment (rio_reader.py:415-429)
+            sub[valid] = block[valid].astype(np_dtype)
+        except Exception as exc:  # errors-as-nodata path
+            if not _exception_matches(exc, errors_as_nodata):
+                raise
+            if error_acc is not None:
+                error_acc.add(1)
+        return tile
 
-                            before_ov = _rmod.FALLBACK_OVERVIEW_READS
-                            block = _read_fallback_window(
-                                row.url, spec, r0, r1, c0, c1, resampling,
-                                overview_mode=overview_mode,
-                            )
-                            if (
-                                overview_acc is not None
-                                and _rmod.FALLBACK_OVERVIEW_READS > before_ov
-                            ):
-                                overview_acc.add(1)
-                        block = block * row.scale + row.offset
-                        sub = tile[
-                            r0 - row.row_off : r1 - row.row_off,
-                            c0 - row.col_off : c1 - row.col_off,
-                        ]
-                        valid = ~np.isnan(block)
-                        # masked cells keep fill; valid cells cast to the
-                        # output dtype on assignment (rio_reader.py:415-429)
-                        sub[valid] = block[valid].astype(np_dtype)
-                    except Exception as exc:  # errors-as-nodata path
-                        if not _exception_matches(exc, errors_as_nodata):
-                            raise
-                        if error_acc is not None:
-                            error_acc.add(1)
-                out_rows.append(
-                    (
-                        row.item_idx,
-                        row.band_idx,
-                        row.tile_y,
-                        row.tile_x,
-                        row.row_off,
-                        row.col_off,
-                        row.tile_h,
-                        row.tile_w,
-                        tile.tobytes(),
-                    )
-                )
-            yield pd.DataFrame(
-                out_rows, columns=[f.name for f in TILE_SCHEMA.fields]
-            )
-
-    return scan
+    return read
 
 
 def _exception_matches(exc: Exception, patterns: tuple) -> bool:
@@ -748,26 +721,167 @@ def _exception_matches(exc: Exception, patterns: tuple) -> bool:
     return False
 
 
+# the read plan's columns: one (asset, output tile) pair per row
+READ_COLS = [
+    "item_idx",
+    "band_idx",
+    "url",
+    "minx",
+    "miny",
+    "maxx",
+    "maxy",
+    "scale",
+    "offset",
+    "tile_y",
+    "tile_x",
+    "row_off",
+    "col_off",
+    "tile_h",
+    "tile_w",
+]
+# a masked plan's data rows also carry their mask band's asset on that tile
+MASK_COLS = [f"mask_{c}" for c in ("url", "minx", "miny", "maxx", "maxy", "scale", "offset")]
+
+
+@dataclass(frozen=True, eq=False)
+class ReadPlan:
+    """What the scan reads, before any window is read: ``rows`` are
+    (asset, output tile) pairs — item, band, url, asset bounds, scale,
+    offset and tile offsets (READ_COLS), the output of
+    ``grid.join_assets_to_tiles`` — and ``options`` are the
+    :func:`make_scan_udf` options.
+
+    Selections filter ``rows``, so Spark applies them below the scan's
+    ``mapInPandas`` and unselected windows are never read. A mask band
+    joins its own rows onto the data rows (:meth:`masked_by`): the kernel
+    then reads each data window with its mask window and applies the keep
+    test. ``tiles`` and ``pixels`` are the one scan kernel with two
+    outputs: tile blocks, or pixel rows straight from the windows.
+    """
+
+    rows: DataFrame
+    spec: RasterSpec
+    options: dict = field(default_factory=dict)
+    # (keep test on the mask window, value for masked pixels); rows then
+    # carry MASK_COLS
+    mask: tuple | None = None
+    _read: object = field(init=False, repr=False)
+
+    def __post_init__(self) -> None:
+        # builds the window read now, so bad options fail at plan time
+        object.__setattr__(self, "_read", make_scan_udf(self.spec, **self.options))
+
+    def masked_by(self, band_idx: int, keep, other) -> "ReadPlan":
+        """Mask every other band by band ``band_idx``: each data row gains
+        that band's asset on the same (item, tile); rows without one are
+        dropped (a missing mask is unknown classification, not "keep").
+        ``keep`` maps a mask block to a boolean block; pixels failing it
+        become ``other``."""
+        m = self.rows.filter(F.col("band_idx") == band_idx).select(
+            "item_idx", "tile_y", "tile_x", *[F.col(c[5:]).alias(c) for c in MASK_COLS]
+        )
+        rows = self.rows.filter(F.col("band_idx") != band_idx).join(
+            m, ["item_idx", "tile_y", "tile_x"]
+        )
+        return replace(self, rows=rows, mask=(keep, other))
+
+    @cached_property
+    def tiles(self) -> DataFrame:
+        """TILE_SCHEMA rows, one per plan row (built once per plan, so a
+        ``cache()`` on it sticks)."""
+        return self._scan(_tile_frame, TILE_SCHEMA)
+
+    def pixels(self, drop_fill: bool = True) -> DataFrame:
+        """PIXEL_SCHEMA rows emitted by the scan itself (see
+        :func:`explode_pixels` for the semantics)."""
+        dtype = self.options.get("dtype", "float64")
+        fill = self.options.get("fill_value", np.nan)
+        _check_relational(dtype)
+        return self._scan(
+            lambda pdf, blocks: _pixel_frame(pdf, blocks, drop_fill, fill), PIXEL_SCHEMA
+        )
+
+    def _scan(self, emit, schema) -> DataFrame:
+        from stackstac_spark.functions.proj import _per_batch
+
+        read, mask = self._read, self.mask
+        cols = READ_COLS + (MASK_COLS if mask is not None else [])
+
+        def scan(pdf: pd.DataFrame) -> pd.DataFrame:
+            kept: dict[tuple, np.ndarray] = {}
+            blocks = []
+            for t in pdf.itertuples(index=False):
+                block = read(t.url, (t.minx, t.miny, t.maxx, t.maxy), t.scale, t.offset, t)
+                if mask is not None:
+                    # one mask read per (item, tile) in the batch, however
+                    # many data bands share it
+                    key = (t.item_idx, t.tile_y, t.tile_x)
+                    if key not in kept:
+                        kept[key] = mask[0](
+                            read(
+                                t.mask_url,
+                                (t.mask_minx, t.mask_miny, t.mask_maxx, t.mask_maxy),
+                                t.mask_scale,
+                                t.mask_offset,
+                                t,
+                            )
+                        )
+                    block = np.where(kept[key], block, mask[1])
+                blocks.append(block)
+            return emit(pdf, blocks)
+
+        return _per_batch(self.rows.select(*cols), scan, schema)
+
+
+def _tile_frame(pdf: pd.DataFrame, blocks: list[np.ndarray]) -> pd.DataFrame:
+    out = {f.name: pdf[f.name].to_numpy() for f in TILE_SCHEMA.fields[:-1]}
+    out["data"] = [b.tobytes() for b in blocks]
+    return pd.DataFrame(out)
+
+
+def _check_relational(dtype: str) -> None:
+    if np.issubdtype(np.dtype(dtype), np.complexfloating):
+        raise ValueError(
+            "Complex tiles have no relational double view; split into "
+            "(real, imag) float tables with operators.complex_ops.split_complex"
+        )
+
+
+def _pixel_frame(
+    tiles: pd.DataFrame, blocks: list[np.ndarray], drop_fill: bool, fill_value: float
+) -> pd.DataFrame:
+    """PIXEL_SCHEMA rows of the tile blocks; ``tiles`` holds each block's
+    item_idx, band_idx, row_off and col_off."""
+    fill_is_nan = isinstance(fill_value, float) and np.isnan(fill_value)
+    rows, cols, vals = [], [], []
+    for arr, r0, c0 in zip(blocks, tiles["row_off"], tiles["col_off"]):
+        if drop_fill:
+            rr, cc = np.nonzero(~np.isnan(arr) if fill_is_nan else arr != fill_value)
+            vals.append(arr[rr, cc])
+        else:
+            rr, cc = np.indices(arr.shape).reshape(2, -1)
+            vals.append(arr.ravel())
+        rows.append(rr + r0)
+        cols.append(cc + c0)
+    n = [len(v) for v in vals]
+
+    def cat(parts: list, dt: str) -> np.ndarray:
+        return np.concatenate(parts).astype(dt) if parts else np.empty(0, dt)
+
+    return pd.DataFrame(
+        {
+            "item_idx": np.repeat(tiles["item_idx"].to_numpy("int32"), n),
+            "band_idx": np.repeat(tiles["band_idx"].to_numpy("int32"), n),
+            "row": cat(rows, "int32"),
+            "col": cat(cols, "int32"),
+            "value": cat(vals, "float64"),
+        }
+    )
+
+
 def scan_tiles(joined: DataFrame, spec: RasterSpec, **kwargs) -> DataFrame:
     """Run the scan over the asset×tile join result → tile DataFrame."""
-    cols = [
-        "item_idx",
-        "band_idx",
-        "url",
-        "minx",
-        "miny",
-        "maxx",
-        "maxy",
-        "scale",
-        "offset",
-        "tile_y",
-        "tile_x",
-        "row_off",
-        "col_off",
-        "tile_h",
-        "tile_w",
-    ]
-    return joined.select(*cols).mapInPandas(make_scan_udf(spec, **kwargs), TILE_SCHEMA)
+    return ReadPlan(joined, spec, kwargs).tiles
 
 
 def explode_pixels(
@@ -781,45 +895,17 @@ def explode_pixels(
     pixels are absent rows) — the 100 TB-friendly default; dense semantics are
     re-synthesized at export (see operators.export). ``value`` is exposed as
     double in the relational view regardless of the storage dtype (complex
-    stacks must go through ``operators.complex_ops.split_complex`` first)."""
-    if np.issubdtype(np.dtype(dtype), np.complexfloating):
-        raise ValueError(
-            "Complex tiles have no relational double view; split into "
-            "(real, imag) float tables with operators.complex_ops.split_complex"
-        )
-    fill_is_nan = isinstance(fill_value, float) and np.isnan(fill_value)
+    stacks must go through ``operators.complex_ops.split_complex`` first).
+    A stack read from its plan emits the same rows from the scan itself
+    (:meth:`ReadPlan.pixels`)."""
+    _check_relational(dtype)
 
     def to_pixels(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in batches:
-            frames = []
-            for row in pdf.itertuples(index=False):
-                arr = np.frombuffer(row.data, dtype=dtype).reshape(
-                    row.tile_h, row.tile_w
-                )
-                if drop_fill:
-                    invalid = np.isnan(arr) if fill_is_nan else (arr == fill_value)
-                    rr, cc = np.nonzero(~invalid)
-                    vals = arr[rr, cc]
-                else:
-                    rr, cc = np.meshgrid(
-                        np.arange(row.tile_h), np.arange(row.tile_w), indexing="ij"
-                    )
-                    rr, cc = rr.ravel(), cc.ravel()
-                    vals = arr.ravel()
-                if len(rr) == 0:
-                    continue
-                frames.append(
-                    pd.DataFrame(
-                        {
-                            "item_idx": np.full(len(rr), row.item_idx, dtype="int32"),
-                            "band_idx": np.full(len(rr), row.band_idx, dtype="int32"),
-                            "row": (rr + row.row_off).astype("int32"),
-                            "col": (cc + row.col_off).astype("int32"),
-                            "value": vals.astype("float64"),
-                        }
-                    )
-                )
-            if frames:
-                yield pd.concat(frames, ignore_index=True)
+            blocks = [
+                np.frombuffer(d, dtype=dtype).reshape(h, w)
+                for d, h, w in zip(pdf["data"], pdf["tile_h"], pdf["tile_w"])
+            ]
+            yield _pixel_frame(pdf, blocks, drop_fill, fill_value)
 
     return tiles.mapInPandas(to_pixels, PIXEL_SCHEMA)

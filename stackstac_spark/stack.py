@@ -3,11 +3,23 @@
 surface (README.md:49-57) as DataFrame-native methods.
 
 A ``RasterStack`` is NOT a dense 4-D array: it is a lazy bundle of
+- ``source``    — the read plan (``sources.raster.ReadPlan``: one row per
+                  (item, band, tile) window still to read), or, for a stack
+                  made from tiles (a warp, a checkpoint, ``where``/``crop``),
+                  the tile DataFrame itself;
 - ``tiles``     — sparse tile DataFrame (one row per non-empty (item, band,
-                  tile) block; the dask chunk grid analogue),
+                  tile) block; the dask chunk grid analogue), derived from
+                  the read plan on first use;
 - ``spec``      — the broadcastable output grid,
 - ``items_df``  — per-time coordinate table (the xarray time coords),
 - ``band_fields`` — per-band constant metadata (the band coords).
+
+Selections (``filter_items``, ``slice_time``, ``isel_time``, ``sel``,
+``sel_bands``, ``slice_bounds``) and ``mask_band`` change the read plan, so
+Spark applies them below the scan and the reference's "only the chunks a
+sliced array still holds are read" holds here too. ``pixels()`` of a planned
+stack is the scan itself emitting pixel rows: one Python pass from COG
+window to pixel row.
 
 All query methods are lazy DataFrame transformations; ``.compute()`` is just
 an action, like the reference's dask graph semantics — Spark's laziness is a
@@ -26,13 +38,17 @@ from pyspark.sql import functions as F
 from stackstac_spark.grid import join_assets_to_tiles, tile_grid
 from stackstac_spark.prepare import Prepared, prepare
 from stackstac_spark.raster_spec import Bbox, RasterSpec
-from stackstac_spark.sources.raster import explode_pixels, scan_tiles
+# scan_tiles is no longer called here; it stays importable under this
+# module because perfbench's tracer looks it up by name (ROADMAP direction 4)
+from stackstac_spark.sources.raster import ReadPlan, explode_pixels, scan_tiles  # noqa: F401
 from stackstac_spark.sources.stac import items_to_dataframes
 
 
 @dataclass
 class RasterStack:
-    tiles: DataFrame
+    # the read plan, which `tiles` and `pixels()` scan; or, for a stack made
+    # from tiles (a warp, a checkpoint, where/crop output), those tiles
+    source: ReadPlan | DataFrame
     spec: RasterSpec
     asset_ids: list[str]
     items_df: DataFrame
@@ -53,10 +69,28 @@ class RasterStack:
     # decimated-read path
     overview_read_acc: Any = None
 
+    @property
+    def tiles(self) -> DataFrame:
+        """The tile blocks (TILE_SCHEMA): the read plan's scan, built once
+        on first use, or the tiles the stack was made from."""
+        src = self.source
+        return src.tiles if isinstance(src, ReadPlan) else src
+
+    def _select(self, rows, **changes) -> "RasterStack":
+        """Apply the row selection ``rows`` (DataFrame → DataFrame over item,
+        band and tile columns) to the read plan, before the scan — or, for a
+        stack made from tiles, to its tiles."""
+        src = self.source
+        src = replace(src, rows=rows(src.rows)) if isinstance(src, ReadPlan) else rows(src)
+        return replace(self, source=src, **changes)
+
     # --- delegated query surface (SURVEY §2.6) --------------------------
 
     def pixels(self, drop_fill: bool = True) -> DataFrame:
-        """Per-pixel relational view (item_idx, band_idx, row, col, value)."""
+        """Per-pixel relational view (item_idx, band_idx, row, col, value);
+        a planned stack's scan emits these rows itself."""
+        if isinstance(self.source, ReadPlan):
+            return self.source.pixels(drop_fill)
         return explode_pixels(
             self.tiles, drop_fill=drop_fill, dtype=self.dtype, fill_value=self.fill_value
         )
@@ -81,7 +115,7 @@ class RasterStack:
         fill = self.fill_value if other is None else other
         return replace(
             self,
-            tiles=where_tiles(self.tiles, cond, other=fill, dtype=self.dtype),
+            source=where_tiles(self.tiles, cond, other=fill, dtype=self.dtype),
         )
 
     def mask_band(
@@ -91,20 +125,28 @@ class RasterStack:
         SCL cloud-mask idiom): pixels whose ``band`` value is not in
         ``keep`` (a value list, or a vectorized numpy predicate) become
         ``other`` (default stack fill). The mask band is consumed — it is
-        removed from the resulting stack. One tile-keyed equi-join + a
-        map-only kernel (operators/mask.py)."""
-        from stackstac_spark.operators.mask import mask_band_tiles
+        removed from the resulting stack.
+
+        On a planned stack the mask band's windows join the data rows of
+        the read plan (metadata, not pixels), and the scan reads each data
+        window with its mask window. A stack made from tiles, or one
+        already masked, joins tile payloads instead
+        (operators/mask.py::mask_band_tiles)."""
+        from stackstac_spark.operators.mask import mask_band_tiles, mask_test
 
         if band not in self.asset_ids:
             raise ValueError(f"Band {band!r} not in stack; available: {self.asset_ids}")
         fill = self.fill_value if other is None else other
         bmap = self._band_map()
         idx = bmap[band]
+        src = self.source
+        if isinstance(src, ReadPlan) and src.mask is None:
+            src = src.masked_by(idx, *mask_test(keep, fill, self.dtype))
+        else:
+            src = mask_band_tiles(self.tiles, idx, keep, other=fill, dtype=self.dtype)
         return replace(
             self,
-            tiles=mask_band_tiles(
-                self.tiles, idx, keep, other=fill, dtype=self.dtype
-            ),
+            source=src,
             asset_ids=[a for a in self.asset_ids if a != band],
             band_idxs=[bmap[a] for a in self.asset_ids if a != band],
         )
@@ -126,7 +168,7 @@ class RasterStack:
         from stackstac_spark.operators.coords import xy_label_tables
 
         return xy_label_tables(
-            self.tiles.sparkSession, self.spec, pixel_center=(self.xy_coords == "center")
+            self.items_df.sparkSession, self.spec, pixel_center=(self.xy_coords == "center")
         )
 
     def create_views(self, prefix: str = "stack_") -> list[str]:
@@ -148,7 +190,7 @@ class RasterStack:
         plan the DataFrame API uses, so Catalyst still prunes columns and
         pushes filters through them identically. Returns the view names.
         """
-        spark = self.tiles.sparkSession
+        spark = self.items_df.sparkSession
         bands = spark.createDataFrame(
             [(idx, aid) for aid, idx in self._band_map().items()],
             "band_idx int, band string",
@@ -173,9 +215,10 @@ class RasterStack:
         return dict(zip(self.asset_ids, idxs))
 
     def sel_bands(self, bands: list[str] | str) -> "RasterStack":
-        """``.sel(band=[...])`` — band select as a Catalyst filter. Keeps
-        the ORIGINAL band_idx of each selected band (via ``band_idxs``),
-        so selecting from an already-selected/masked stack composes."""
+        """``.sel(band=[...])`` — band select as a filter on the read plan.
+        Keeps the ORIGINAL band_idx of each selected band (via
+        ``band_idxs``), so selecting from an already-selected/masked stack
+        composes."""
         if isinstance(bands, str):
             bands = [bands]
         unknown = [b for b in bands if b not in self.asset_ids]
@@ -183,24 +226,22 @@ class RasterStack:
             raise ValueError(f"Bands {unknown} not in stack; available: {self.asset_ids}")
         bmap = self._band_map()
         idxs = [bmap[b] for b in bands]
-        return replace(
-            self,
-            tiles=self.tiles.filter(F.col("band_idx").isin(idxs)),
+        return self._select(
+            lambda df: df.filter(F.col("band_idx").isin(idxs)),
             asset_ids=list(bands),
             band_idxs=idxs,
         )
 
     def filter_items(self, predicate: Any) -> "RasterStack":
         """``stack[stack["eo:cloud_cover"] < 20]`` — metadata predicate
-        filter: filter the item coord table, semi-join tiles on item_idx.
-        ``predicate`` is a Column over ``items_df`` (properties map exposed
-        as ``properties['key']``)."""
-        keep = self.items_df.filter(predicate).select("item_idx")
-        return replace(
-            self,
-            tiles=self.tiles.join(F.broadcast(keep), "item_idx", "left_semi"),
-            items_df=self.items_df.filter(predicate),
-        )
+        filter: filter the item coord table, semi-join the read plan on
+        item_idx. ``predicate`` is a Column over ``items_df`` (properties
+        map exposed as ``properties['key']``)."""
+        return self._keep_items(self.items_df.filter(predicate))
+
+    def _keep_items(self, items: DataFrame) -> "RasterStack":
+        keep = F.broadcast(items.select("item_idx"))
+        return self._select(lambda df: df.join(keep, "item_idx", "left_semi"), items_df=items)
 
     def slice_time(self, start: str | None = None, end: str | None = None) -> "RasterStack":
         """``.loc["2020-01":"2020-04"]`` — label slicing on time."""
@@ -209,12 +250,7 @@ class RasterStack:
             items = items.filter(F.col("datetime") >= start)
         if end is not None:
             items = items.filter(F.col("datetime") <= end)
-        keep = items.select("item_idx")
-        return replace(
-            self,
-            tiles=self.tiles.join(F.broadcast(keep), "item_idx", "left_semi"),
-            items_df=items,
-        )
+        return self._keep_items(items)
 
     def sel(
         self,
@@ -275,17 +311,17 @@ class RasterStack:
         from stackstac_spark.operators.crop import crop_tiles
 
         tiles, spec = crop_tiles(self.tiles, self.spec, bounds, dtype=self.dtype)
-        return replace(self, tiles=tiles, spec=spec)
+        return replace(self, source=tiles, spec=spec)
 
     def slice_bounds(self, bounds: Bbox) -> "RasterStack":
         """Spatial slice: keep only the whole tiles overlapping ``bounds``
-        (in the spec's CRS) — a plan-time range filter on the tile offsets.
+        (in the spec's CRS) — a range filter on the read plan's tile offsets.
         The spec is unchanged and kept tiles keep their pixels outside
         ``bounds``; use :meth:`crop` for the pixel-true cut."""
         from stackstac_spark.operators.crop import tiles_in_window
 
         win = self.spec.pixel_window_from_bounds(bounds)
-        return replace(self, tiles=tiles_in_window(self.tiles, win))
+        return self._select(lambda df: tiles_in_window(df, win))
 
     # --- compute --------------------------------------------------------
 
@@ -375,7 +411,8 @@ def stack(
     overview_mode: str = "exact",
     catalog_format: str | None = None,
 ) -> RasterStack:
-    """items → prepared asset table → tile grid join → lazy scan.
+    """items → prepared asset table → tile grid join → the read plan
+    (``tiles`` and ``pixels()`` are scans of it).
 
     ``properties`` picks which item-property fields are exposed as
     time-dimension metadata (reference stack.py:45,230-237): ``True`` = all,
@@ -479,7 +516,6 @@ def stack(
     )
     if errors_as_nodata is not None:
         kwargs["errors_as_nodata"] = errors_as_nodata
-    tiles = scan_tiles(joined, prepared.spec, **kwargs)
     items_df = prepared.items_df
     if properties is False:
         items_df = items_df.withColumn(
@@ -492,7 +528,7 @@ def stack(
             F.map_filter("properties", lambda k, v: k.isin(*keep) if len(keep) else F.lit(False)),
         )
     return RasterStack(
-        tiles=tiles,
+        source=ReadPlan(joined, prepared.spec, kwargs),
         spec=prepared.spec,
         asset_ids=prepared.asset_ids,
         items_df=items_df,

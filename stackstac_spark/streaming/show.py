@@ -31,6 +31,7 @@ import numpy as np
 
 from stackstac_spark.functions.png import arr_to_png, empty_tile
 from stackstac_spark.operators.composite import display_range
+from stackstac_spark.sources.raster import explode_pixels
 # perfbench's tracer patches this name here; ROADMAP direction 4 removes that patching
 from stackstac_spark.operators.mosaic import mosaic_tiles  # noqa: F401
 
@@ -75,7 +76,11 @@ def register(
         raise ValueError("cmap only applies to single-band layers")
     stack.tiles.cache()
     if range is None:
-        range = display_range(stack.pixels())
+        # from the cached tiles: a planned stack's pixels() is a fresh scan
+        # of the sources
+        range = display_range(
+            explode_pixels(stack.tiles, dtype=stack.dtype, fill_value=stack.fill_value)
+        )
     try:  # plan fingerprint (dask-tokenize analogue); private API, so guarded
         plan = stack.tiles._jdf.queryExecution().logical().toString()
     except Exception:

@@ -2,6 +2,7 @@
 the temporal resample / dim-reduction operators."""
 
 import numpy as np
+import pytest
 from pyspark.sql import functions as F
 
 from stackstac_spark.stack import stack
@@ -130,6 +131,34 @@ def test_resample_time_and_reduce_dims(spark):
     assert (s0.period_start.month, s0["count"]) == (1, 3)  # ["count"]: tuple.count shadows the field
 
 
+def test_resample_median_is_nanmedian_with_midpoint_for_even_counts(spark):
+    """The composite oracle reduces with ``np.nanmedian``: Spark's
+    ``median`` must agree, including the midpoint of the two middle values
+    when a period holds an even number of observations (2 and 4 here)."""
+    import datetime as dt
+
+    from stackstac_spark.operators.composite import resample_time
+
+    rng = np.random.default_rng(5)
+    obs = {  # (row, col) -> January observations
+        (0, 0): rng.normal(size=2),
+        (0, 1): rng.normal(size=4),
+        (1, 0): np.array([3.0, -1.0, 8.0, 0.5]),  # midpoint 1.75
+        (1, 1): rng.normal(size=3),
+    }
+    rows = [
+        (r, c, dt.datetime(2024, 1, 1 + k), float(v))
+        for (r, c), vals in obs.items()
+        for k, v in enumerate(vals)
+    ]
+    px = spark.createDataFrame(rows, "row int, col int, time timestamp, value double")
+    got = {(r.row, r.col): r.median for r in resample_time(px, "1 month", "median").collect()}
+    for key, vals in obs.items():
+        assert got[key] == pytest.approx(np.nanmedian(vals), rel=1e-12, abs=0), key
+    assert got[(0, 0)] == pytest.approx(obs[(0, 0)].mean(), rel=1e-12)
+    assert got[(1, 0)] == 1.75
+
+
 def test_integer_dtype_stack(spark):
     """Reference parity: non-float dtypes with a castable fill_value
     (testing/strategies.py:26-31 exercises uint/int dtypes)."""
@@ -179,12 +208,12 @@ def test_complex_dtype_stack(spark):
     # (real, imag) float views feed the existing operators unchanged
     re_tiles, im_tiles = split_complex(st.tiles, "complex128")
     re_stack = type(st)(
-        tiles=re_tiles, spec=st.spec, asset_ids=st.asset_ids, items_df=st.items_df
+        source=re_tiles, spec=st.spec, asset_ids=st.asset_ids, items_df=st.items_df
     )
     re_dense = to_dense_array(re_stack)
     np.testing.assert_array_equal(re_dense, dense.real)
     im_stack = type(st)(
-        tiles=im_tiles, spec=st.spec, asset_ids=st.asset_ids, items_df=st.items_df
+        source=im_tiles, spec=st.spec, asset_ids=st.asset_ids, items_df=st.items_df
     )
     im_dense = to_dense_array(im_stack)
     finite = ~np.isnan(dense)

@@ -7,6 +7,7 @@ stays shuffle-free."""
 import os
 import sys
 
+import numpy as np
 import pytest
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
@@ -87,6 +88,16 @@ def test_raster_scan_path_has_no_shuffle(spark):
     assert not hash_exchanges, hash_exchanges
 
 
+def _overlapping_3857_grid(spec):
+    """A 1-unit EPSG:3857 grid over the Web-Mercator footprint of ``spec``."""
+    from stackstac_spark.functions.proj import reproject_bounds
+    from stackstac_spark.raster_spec import RasterSpec
+
+    minx, miny, maxx, maxy = reproject_bounds(spec.bounds, spec.epsg, 3857)
+    bounds = (np.floor(minx), np.floor(miny), np.ceil(maxx), np.ceil(maxy))
+    return RasterSpec(3857, tuple(float(v) for v in bounds), (1.0, 1.0))
+
+
 def test_warp_dst_grid_is_generated_executor_side(spark):
     """The destination tile grid of a reproject must come from executors
     (the window kernel per Arrow batch of ``spark.range`` ids), not a
@@ -94,7 +105,6 @@ def test_warp_dst_grid_is_generated_executor_side(spark):
     dst tiles, and a driver loop would both OOM and serialize the job
     before it starts."""
     from stackstac_spark.operators.warp import reproject_tiles
-    from stackstac_spark.raster_spec import RasterSpec
     from stackstac_spark.stack import stack as _stack
     from tests.conftest import make_item
 
@@ -104,10 +114,12 @@ def test_warp_dst_grid_is_generated_executor_side(spark):
         assets=["red"],
         chunksize=16,
     )
-    dst = RasterSpec(3857, (0.0, 0.0, 64.0, 64.0), (2.0, 2.0))
+    dst = _overlapping_3857_grid(st.spec)
     # grid_on_driver_max=0 forces the large-grid strategy so the guard keeps
     # checking the path a million-tile reproject would take
-    plan = _plan(reproject_tiles(st.tiles, st.spec, dst, chunksize=16, grid_on_driver_max=0))
+    warped = reproject_tiles(st.tiles, st.spec, dst, chunksize=16, grid_on_driver_max=0)
+    assert warped.count() > 0  # the plan below is that of a warp that produces tiles
+    plan = _plan(warped)
     # the dst tile table is a Python stage directly over a Range
     lines = plan.splitlines()
     grid = [i for i, ln in enumerate(lines) if "MapInPandas" in ln and "[dty" in ln and "dtx" in ln]
@@ -125,7 +137,6 @@ def test_warp_small_grid_builds_on_driver(spark):
     grid arrives as a driver-built LocalTableScan and the only Python stage
     left is the warp kernel itself."""
     from stackstac_spark.operators.warp import reproject_tiles
-    from stackstac_spark.raster_spec import RasterSpec
     from stackstac_spark.stack import stack as _stack
     from tests.conftest import make_item
 
@@ -135,8 +146,10 @@ def test_warp_small_grid_builds_on_driver(spark):
         assets=["red"],
         chunksize=16,
     )
-    dst = RasterSpec(3857, (0.0, 0.0, 64.0, 64.0), (2.0, 2.0))
-    plan = _plan(reproject_tiles(st.tiles, st.spec, dst, chunksize=16))
+    dst = _overlapping_3857_grid(st.spec)
+    warped = reproject_tiles(st.tiles, st.spec, dst, chunksize=16)
+    assert warped.count() > 0  # the plan below is that of a warp that produces tiles
+    plan = _plan(warped)
     assert "LocalTableScan [dty" in plan
     # the source tile grid still explodes executor-side; the DST grid must not
     dst_generates = [

@@ -83,3 +83,24 @@ def test_jsonl_stack_items_df_reads_the_cache(spark, tmp_path):
     plan = st.items_df._jdf.queryExecution().optimizedPlan()
     assert plan.nodeName() == "InMemoryRelation", plan.toString()
     assert st.items_df.count() == 3
+
+
+
+def test_empty_local_df_is_an_empty_local_relation(spark):
+    """``prepare_local`` builds an empty band-fields table for every stack
+    without band metadata: it must be a JVM LocalRelation, not an
+    RDD-backed frame (which costs a Python round trip per action)."""
+    from pyspark.sql.types import IntegerType, StructField, StructType
+
+    from stackstac_spark.session import local_df
+
+    struct = StructType([StructField("band_idx", IntegerType())])
+    for schema in ("band_idx int, key string, value string", struct):
+        df = local_df(spark, [], schema)
+        plan = df._jdf.queryExecution().optimizedPlan().toString()
+        assert plan.startswith("LocalRelation <empty>"), plan
+        assert df.count() == 0
+    assert df.schema == struct
+    assert local_df(spark, [], "band_idx int, key string").schema.simpleString() == (
+        "struct<band_idx:int,key:string>"
+    )
