@@ -5196,7 +5196,7 @@ FROM px WHERE 2*row + 1 < 40 AND 2*col + 1 < 40 ORDER BY row, col
 
 def q_raster_resample_cubic(spark, sf):
     """Keys (1981) a=-0.5 cubic-convolution warp (operators/warp.py::
-    _interp_tile 'cubic' — the rasterio Resampling.cubic kernel), oracle-
+    _gather 'cubic' — the rasterio Resampling.cubic kernel), oracle-
     checked: cubic convolution is third-order accurate, so on the linear
     painted surface it reproduces the same closed form as bilinear — but
     over a ONE-RING-TIGHTER footprint (the 4x4 stencil must fit: R,C in

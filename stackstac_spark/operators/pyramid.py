@@ -10,8 +10,11 @@ touches O(tilesize²) source pixels at its own level instead of the full
 resolution — the same contract COG readers get from overviews
 (reference rio_reader.py opens with OVERVIEW_LEVEL via WarpedVRT, and
 show.py's dask graph gets this for free from the input's overviews).
-``xyztile_from_pyramid`` then warps and mosaics the tile from that level in
-one stage (``operators.warp.xyztile_mosaic``).
+``xyztile_from_pyramid`` then returns the tile's cut source rows on that
+level (``operators.warp.xyztile_cut``): one narrow Spark job over the
+cached level, no exchange, at most n_items x n_bands x 9 x window² x
+itemsize bytes; the caller warps and mosaics them on the driver
+(``operators.warp.xyztile_mosaic``, run by ``streaming.show.compute_tile``).
 
 Level 0 is the stack's own tile table, whose payload is in the stack's
 dtype; coarser levels are warp output, always float64.
@@ -114,18 +117,12 @@ def xyztile_from_pyramid(
     x: int,
     y: int,
     tilesize: int = 256,
-    method: str = "linear",
 ) -> tuple[DataFrame | None, int]:
-    """Serve one XYZ tile from the best pyramid level, warped and mosaicked
-    over items in one stage; returns (``TILE_MOSAIC_SCHEMA`` frame with one
-    row per band, or None if the tile misses the stack; level used)."""
-    from stackstac_spark.operators.warp import xyztile_mosaic
+    """The source rows of one XYZ tile on the best pyramid level: returns
+    (``xyztile_cut`` frame, or None if the tile misses the stack; level
+    used). Its rows are in ``pyramid.level_dtype(level)``."""
+    from stackstac_spark.operators.warp import xyztile_cut
 
     k = pick_level(pyramid, z, tilesize)
     spec_k, tiles_k = pyramid.levels[k]
-    return (
-        xyztile_mosaic(
-            tiles_k, spec_k, z, x, y, tilesize=tilesize, method=method, dtype=pyramid.level_dtype(k)
-        ),
-        k,
-    )
+    return xyztile_cut(tiles_k, spec_k, z, x, y, tilesize=tilesize, dtype=pyramid.level_dtype(k)), k

@@ -11,11 +11,16 @@ bilinear, and cubic (Keys a=-0.5, the rasterio Resampling.cubic kernel)
 interpolation are implemented in numpy directly (scipy is not a
 dependency; interpn on a regular grid reduces to index arithmetic).
 
-A served map tile (``xyztile_mosaic``) is one output tile, so it skips the
-join: its one source window is a literal filter on the source tiles, and a
-single per-band kernel warps each item top-first and folds it into the
-mosaic, stopping once the tile is full — the reference's per-tile
-``_compute_tile`` (show.py:343-397) as one Spark stage.
+A served map tile is one output tile, so it skips the join and the
+exchange — the reference's per-tile ``_compute_tile`` (show.py:343-397),
+which fetches the chunks under the tile and finishes it locally:
+``xyztile_cut`` is one narrow Spark job, a literal filter on the source
+tiles for the tile's one source window, each bigger tile cut down to the
+window; ``xyztile_mosaic`` then warps the collected rows on the driver,
+one coordinate grid for every item and band, each item top-first folded
+into the mosaic, stopping once the tile is full. What is collected is at
+most n_items x n_bands x 9 x window² x itemsize bytes — the bytes an
+exchange into a per-band kernel would move.
 
 The reference collapses spatial chunks to warp whole arrays at once
 (geom_utils.py:245-248 admits this doesn't scale); the per-output-tile
@@ -53,22 +58,17 @@ def xyz_tile_bounds(z: int, x: int, y: int) -> Bbox:
     return (minx, maxy - size, minx + size, maxy)
 
 
-def _interp_tile(
-    src: np.ndarray,
+def _src_grid(
     src_spec: RasterSpec,
     src_origin: tuple[int, int],
     dst_spec: RasterSpec,
     dst_window: tuple[int, int, int, int],
-    method: str,
-) -> np.ndarray:
-    """Interpolate one output window from a (padded) source block.
-
-    src is a dense block whose [0,0] pixel is global (row, col) = src_origin
-    on the SOURCE grid. Output pixel centers are inverse-projected into
-    source fractional pixel coords; nearest or bilinear gather follows
-    (the numpy reduction of the reference's interp/interpn calls,
-    geom_utils.py:276-304).
-    """
+) -> tuple[np.ndarray, np.ndarray]:
+    """Fractional source pixel coords (rows, cols) of the output window's
+    pixel centres, relative to global source pixel ``src_origin``: the
+    output pixel centres inverse-projected into the source grid
+    (pixel-center convention). Depends on no pixel value, so one grid
+    serves every item and band warped onto the same window."""
     r0, c0, h, w = dst_window
     dxres, dyres = dst_spec.resolutions_xy
     dminx, _, _, dmaxy = dst_spec.bounds
@@ -79,9 +79,17 @@ def _interp_tile(
     sx, sy = transform_xy(dst_spec.epsg, src_spec.epsg, xx.ravel(), yy.ravel())
     sxres, syres = src_spec.resolutions_xy
     sminx, _, _, smaxy = src_spec.bounds
-    # fractional source pixel coords (pixel-center convention)
     fc = (sx.reshape(h, w) - sminx) / sxres - 0.5 - src_origin[1]
     fr = (smaxy - sy.reshape(h, w)) / syres - 0.5 - src_origin[0]
+    return fr, fc
+
+
+def _gather(src: np.ndarray, fr: np.ndarray, fc: np.ndarray, method: str) -> np.ndarray:
+    """Nearest, bilinear or cubic gather of ``src`` at the fractional pixel
+    coords (``_src_grid``) — the numpy reduction of the reference's
+    interp/interpn calls (geom_utils.py:276-304); NaN where a tap falls
+    outside the block."""
+    h, w = fr.shape
     sh, sw = src.shape
     out = np.full((h, w), np.nan)
     if method == "nearest":
@@ -252,9 +260,9 @@ def _assemble_block(rows: pd.DataFrame, window: tuple[int, int, int, int], dtype
 def _crop_to_window(tiles: DataFrame, window: tuple[int, int, int, int], dtype: str) -> DataFrame:
     """The source tiles under the window ``[sr0, sr1) x [sc0, sc1)``. A tile
     that fits in the window stays whole; a bigger one is cut down to its
-    part inside it. So what crosses the exchange to a served tile's kernel
-    is at most 9x the window's pixels per item, whatever the stack's
-    chunksize. A narrow JVM projection (byte ``substring`` of the row-major
+    part inside it. So what a served tile collects is at most 9x the
+    window's pixels per item and band, whatever the stack's chunksize. A
+    narrow JVM projection (byte ``substring`` of the row-major
     payload, no Python): a cut tile within the window's columns keeps one
     contiguous run of rows; a wider one becomes one single-row strip per
     window row."""
@@ -442,13 +450,9 @@ def reproject_tiles(
         item_idx, band_idx, dty, dtx = (int(k) for k in key)
         first = pdf.iloc[0]
         window = (int(first.sr0), int(first.sc0), int(first.sr1), int(first.sc1))
-        out = _interp_tile(
-            _assemble_block(pdf, window, dtype),
-            src_spec,
-            window[:2],
-            dst_spec,
-            (int(first.dr0), int(first.dc0), int(first.dh), int(first.dw)),
-            meth,
+        dst_window = (int(first.dr0), int(first.dc0), int(first.dh), int(first.dw))
+        out = _gather(
+            _assemble_block(pdf, window, dtype), *_src_grid(src_spec, window[:2], dst_spec, dst_window), meth
         )
         return pd.DataFrame(
             [
@@ -499,8 +503,38 @@ def xyztile_of_tiles(
     return reproject_tiles(tiles, src_spec, dst_spec, chunksize=tilesize, method=method, dtype=dtype)
 
 
-def xyztile_mosaic(
+def _xyz_window(src_spec: RasterSpec, z: int, x: int, y: int, tilesize: int):
+    """OSM tile (z, x, y) as a one-tile dst grid on ``src_spec``: its
+    EPSG:3857 spec, its source window ``(sr0, sc0, sr1, sc1)`` and its dst
+    window ``(dr0, dc0, dh, dw)`` — the window and halo ``reproject_tiles``
+    gives it — or None if the tile doesn't overlap the stack."""
+    dst_spec = _xyz_dst_spec(src_spec, z, x, y, tilesize)
+    if dst_spec is None:
+        return None
+    (w,) = _src_windows(src_spec, dst_spec, tilesize, halo=2).itertuples(index=False)
+    return dst_spec, (int(w.sr0), int(w.sc0), int(w.sr1), int(w.sc1)), (int(w.dr0), int(w.dc0), int(w.dh), int(w.dw))
+
+
+def xyztile_cut(
     tiles: DataFrame,
+    src_spec: RasterSpec,
+    z: int,
+    x: int,
+    y: int,
+    tilesize: int = 256,
+    dtype: str = "float64",
+) -> DataFrame | None:
+    """The source rows OSM tile (z, x, y) is warped from, or None if the
+    tile doesn't overlap the stack: a literal overlap filter on ``tiles``
+    for the tile's one source window, each bigger tile cut down to the
+    window (``_crop_to_window``). A narrow plan, no exchange; collected, it
+    is at most n_items x n_bands x 9 x window² x itemsize bytes."""
+    win = _xyz_window(src_spec, z, x, y, tilesize)
+    return None if win is None else _crop_to_window(tiles, win[1], dtype)
+
+
+def xyztile_mosaic(
+    rows: pd.DataFrame,
     src_spec: RasterSpec,
     z: int,
     x: int,
@@ -508,54 +542,32 @@ def xyztile_mosaic(
     tilesize: int = 256,
     method: str = "linear",
     dtype: str = "float64",
-) -> DataFrame | None:
-    """One OSM tile, warped and mosaicked last-on-top over items: one
-    ``TILE_MOSAIC_SCHEMA`` row per band, or None if the tile doesn't overlap
-    the stack. Equal, byte for byte, to
-    ``mosaic_tiles(xyztile_of_tiles(...))``, in one stage:
+) -> dict[int, np.ndarray]:
+    """OSM tile (z, x, y) warped and mosaicked last-on-top over items, from
+    its collected ``xyztile_cut`` rows, in numpy: ``{band_idx: float64
+    (tilesize, tilesize) array}`` for each band with rows. Equal, byte for
+    byte, to ``mosaic_tiles(xyztile_of_tiles(...))``:
 
-    1. the tile's one source window is computed on the driver
-       (``_src_windows``);
-    2. a literal overlap filter keeps the source tiles under it, each cut
-       down to the window before the exchange (``_crop_to_window``), so a
-       band's group holds O(items x window²) bytes;
-    3. one ``groupBy("band_idx").applyInPandas`` assembles each item's
-       padded block and interpolates it, top item (highest ``item_idx``)
+    1. the tile's fractional source-pixel grid is computed once
+       (``_src_grid``) and serves every item and band;
+    2. per band, each item's padded block is assembled
+       (``_assemble_block``) and gathered, top item (highest ``item_idx``)
        first, folding it into the output (``_mosaic_fold``);
-    4. the fold stops once the tile has no invalid pixels, so the items
+    3. the fold stops once the tile has no invalid pixels, so the items
        underneath are never warped.
     """
-    from stackstac_spark.operators.mosaic import TILE_MOSAIC_SCHEMA, _mosaic_fold
+    from stackstac_spark.operators.mosaic import _mosaic_fold
 
     meth = _interp_method(method)
-    dst_spec = _xyz_dst_spec(src_spec, z, x, y, tilesize)
-    if dst_spec is None:
-        return None
-    # the same window and halo reproject_tiles gives a one-tile dst grid
-    (w,) = _src_windows(src_spec, dst_spec, tilesize, halo=2).itertuples(index=False)
-    window = (int(w.sr0), int(w.sc0), int(w.sr1), int(w.sc1))
-    dst_window = (int(w.dr0), int(w.dc0), int(w.dh), int(w.dw))
-    _crs_snap = user_crs_snapshot()
-
-    def warp_fold(key, pdf):
-        install_user_crs(_crs_snap)
-        items = reversed(list(pdf.groupby("item_idx", sort=True)))
-        out = _mosaic_fold(
+    dst_spec, window, dst_window = _xyz_window(src_spec, z, x, y, tilesize)
+    fr, fc = _src_grid(src_spec, window[:2], dst_spec, dst_window)
+    return {
+        int(band_idx): _mosaic_fold(
             (
-                _interp_tile(
-                    _assemble_block(rows, window, dtype), src_spec, window[:2], dst_spec, dst_window, meth
-                )
-                for _, rows in items
+                _gather(_assemble_block(item_rows, window, dtype), fr, fc, meth)
+                for _, item_rows in reversed(list(band_rows.groupby("item_idx", sort=True)))
             ),
             np.nan,
         )
-        return pd.DataFrame(
-            [(int(key[0]), int(w.dty), int(w.dtx), *dst_window, out.tobytes())],
-            columns=[f.name for f in TILE_MOSAIC_SCHEMA.fields],
-        )
-
-    return (
-        _crop_to_window(tiles, window, dtype)
-        .groupBy("band_idx")
-        .applyInPandas(warp_fold, TILE_MOSAIC_SCHEMA)
-    )
+        for band_idx, band_rows in rows.groupby("band_idx", sort=True)
+    }

@@ -791,6 +791,11 @@ class ReadPlan:
         ``cache()`` on it sticks)."""
         return self._scan(_tile_frame, TILE_SCHEMA)
 
+    @property
+    def tiles_cached(self) -> bool:
+        """Whether ``tiles`` is built and the caller cached it."""
+        return "tiles" in self.__dict__ and self.tiles.is_cached
+
     def pixels(self, drop_fill: bool = True) -> DataFrame:
         """PIXEL_SCHEMA rows emitted by the scan itself (see
         :func:`explode_pixels` for the semantics)."""

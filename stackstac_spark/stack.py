@@ -88,9 +88,11 @@ class RasterStack:
 
     def pixels(self, drop_fill: bool = True) -> DataFrame:
         """Per-pixel relational view (item_idx, band_idx, row, col, value);
-        a planned stack's scan emits these rows itself."""
-        if isinstance(self.source, ReadPlan):
-            return self.source.pixels(drop_fill)
+        a planned stack's scan emits these rows itself, unless the caller
+        cached its ``tiles``: then they are exploded from that cache."""
+        src = self.source
+        if isinstance(src, ReadPlan) and not src.tiles_cached:
+            return src.pixels(drop_fill)
         return explode_pixels(
             self.tiles, drop_fill=drop_fill, dtype=self.dtype, fill_value=self.fill_value
         )

@@ -5,15 +5,20 @@
   percentiles (show.py:484-497), token the layer (plan fingerprint), cache
   the tile DataFrame so every map tile reuses the same computed stack.
 - ``TileServer``          → stdlib ThreadingHTTPServer serving
-  ``/{token}/{z}/{x}/{y}.png``; each request warps and mosaics the
-  requested XYZ tile from the layer's overview pyramid in one stage
-  (operators.pyramid.xyztile_from_pyramid → operators.warp.xyztile_mosaic:
-  one groupBy-band kernel, top item first, stopping once the tile is
-  full), collects one row per band and PNG-encodes. The tile's jobs run
-  under a per-layer job group so out-of-view requests are cancellable
-  (sc.cancelJobGroup, the analogue of the reference's speculative-tile
-  cancellation, show.py:242-257).
-- LRU tile cache of 512 entries (show.py:44-45).
+  ``/{token}/{z}/{x}/{y}.png``; each uncached request is one narrow Spark
+  job: the requested XYZ tile's source rows on the pyramid level
+  ``pick_level`` chooses, cut to its window
+  (operators.pyramid.xyztile_from_pyramid → operators.warp.xyztile_cut),
+  collected through Arrow — at most n_items x n_bands x 9 x window² x
+  itemsize bytes — then warped and mosaicked on the driver
+  (operators.warp.xyztile_mosaic: one coordinate grid per tile, top item
+  first, stopping once the tile is full) and PNG-encoded. The tile's job
+  runs under a per-layer job group so out-of-view requests are
+  cancellable (sc.cancelJobGroup, the analogue of the reference's
+  speculative-tile cancellation, show.py:242-257).
+- LRU tile cache of 512 entries (show.py:44-45), with per-layer hit and
+  miss counts and the latency of recently computed tiles
+  (``server_stats``).
 
 aiohttp/ipyleaflet are not available here; the HTTP protocol and URL shape
 match the reference so any slippy-map client works.
@@ -23,7 +28,8 @@ from __future__ import annotations
 
 import hashlib
 import threading
-from collections import OrderedDict
+import time
+from collections import OrderedDict, deque
 from dataclasses import dataclass, field
 from http.server import BaseHTTPRequestHandler, ThreadingHTTPServer
 
@@ -31,11 +37,11 @@ import numpy as np
 
 from stackstac_spark.functions.png import arr_to_png, empty_tile
 from stackstac_spark.operators.composite import display_range
-from stackstac_spark.sources.raster import explode_pixels
 # perfbench's tracer patches this name here; ROADMAP direction 4 removes that patching
 from stackstac_spark.operators.mosaic import mosaic_tiles  # noqa: F401
 
 _CACHE_SIZE = 512
+_LATENCY_WINDOW = 256  # computed tiles server_stats' percentiles are over
 
 
 @dataclass
@@ -48,6 +54,9 @@ class Layer:
     pyramid: "object"  # operators.pyramid.Pyramid
     tile_cache: OrderedDict = field(default_factory=OrderedDict)
     lock: threading.Lock = field(default_factory=threading.Lock)
+    hits: int = 0
+    misses: int = 0
+    compute_ms: deque = field(default_factory=lambda: deque(maxlen=_LATENCY_WINDOW))
 
 
 _LAYERS: dict[str, Layer] = {}
@@ -76,11 +85,7 @@ def register(
         raise ValueError("cmap only applies to single-band layers")
     stack.tiles.cache()
     if range is None:
-        # from the cached tiles: a planned stack's pixels() is a fresh scan
-        # of the sources
-        range = display_range(
-            explode_pixels(stack.tiles, dtype=stack.dtype, fill_value=stack.fill_value)
-        )
+        range = display_range(stack.pixels())  # read from the cached tiles
     try:  # plan fingerprint (dask-tokenize analogue); private API, so guarded
         plan = stack.tiles._jdf.queryExecution().logical().toString()
     except Exception:
@@ -98,35 +103,42 @@ def register(
 
 
 def compute_tile(layer: Layer, z: int, x: int, y: int, tilesize: int = 256) -> bytes:
-    """One XYZ tile (the reference's _compute_tile, show.py:343-397): one
-    Spark stage warps and mosaics every item per band from the pyramid
-    level ``pick_level`` chooses; the band rows are collected into a dense
-    array and PNG-encoded."""
+    """One XYZ tile (the reference's _compute_tile, show.py:343-397), in
+    one narrow Spark job: the tile's source rows on the pyramid level
+    ``pick_level`` chooses, cut to its window, are collected through Arrow
+    (at most n_items x n_bands x 9 x window² x itemsize bytes), warped and
+    mosaicked per band on the driver (``xyztile_mosaic``) and PNG-encoded.
+    A cached tile is a hit; a computed one a miss, with its latency."""
     with layer.lock:
         cached = layer.tile_cache.get((z, x, y))
         if cached is not None:
             layer.tile_cache.move_to_end((z, x, y))
+            layer.hits += 1
             return cached
     from stackstac_spark.operators.pyramid import xyztile_from_pyramid
+    from stackstac_spark.operators.warp import xyztile_mosaic
 
+    t0 = time.perf_counter()
     st = layer.stack
     sc = st.tiles.sparkSession.sparkContext
     sc.setJobGroup(f"tile-{layer.token}", f"tile z={z} x={x} y={y}", interruptOnCancel=True)
     try:
-        mosaic, _level = xyztile_from_pyramid(layer.pyramid, z, x, y, tilesize=tilesize)
-        if mosaic is None:
+        cut, level = xyztile_from_pyramid(layer.pyramid, z, x, y, tilesize=tilesize)
+        if cut is None:
             png = empty_tile((tilesize, tilesize), layer.checkerboard)
         else:
-            rows = mosaic.collect()
-            arr = np.full((len(st.asset_ids), tilesize, tilesize), np.nan)
-            for r in rows:
-                arr[r.band_idx] = np.frombuffer(r.data, dtype="float64").reshape(
-                    r.tile_h, r.tile_w
-                )
+            spec, _ = layer.pyramid.levels[level]
+            bands = xyztile_mosaic(
+                cut.toPandas(), spec, z, x, y, tilesize=tilesize, dtype=layer.pyramid.level_dtype(level)
+            )
+            nan_tile = np.full((tilesize, tilesize), np.nan)
+            arr = np.stack([bands.get(b, nan_tile) for b in st._band_map().values()])
             png = arr_to_png(arr, layer.range, layer.cmap, layer.checkerboard)
     finally:
         sc.setJobGroup("", "")
     with layer.lock:
+        layer.misses += 1
+        layer.compute_ms.append((time.perf_counter() - t0) * 1000.0)
         layer.tile_cache[(z, x, y)] = png
         while len(layer.tile_cache) > _CACHE_SIZE:
             layer.tile_cache.popitem(last=False)
@@ -223,17 +235,26 @@ def server_stats() -> list[dict]:
     """Per-layer serving stats — the reference's ``stackstac.server_stats``
     (show.py:63-121), data-shaped instead of an ipywidgets VBox (render it
     however you like; the reference's widget is UI glue over the same
-    numbers). One dict per registered layer: cached tile count, pending
-    speculative prefetches, display range, and the epsg/bounds of the
-    underlying stack."""
+    numbers). One dict per registered layer: cached tile count, cache hits
+    and misses, the median and 90th percentile of the compute latency of
+    the last ``_LATENCY_WINDOW`` computed tiles (None before the first),
+    pending speculative prefetches, display range, and the epsg/bounds of
+    the underlying stack."""
     out = []
     for token, layer in _LAYERS.items():
         with layer.lock:
             n_cached = len(layer.tile_cache)
+            hits, misses = layer.hits, layer.misses
+            ms = list(layer.compute_ms)
+        p50, p90 = np.percentile(ms, [50, 90]).tolist() if ms else (None, None)
         out.append(
             {
                 "token": token,
                 "cached_tiles": n_cached,
+                "hits": hits,
+                "misses": misses,
+                "compute_ms_p50": p50,
+                "compute_ms_p90": p90,
                 "pending_prefetch": sum(
                     1 for k in _PREFETCH_FUTURES if k[0] == token
                 ),

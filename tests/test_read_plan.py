@@ -220,3 +220,23 @@ def test_planned_tiles_are_built_once(stacks):
     (show() does this) sticks."""
     st = stacks["float64"].sel_bands("red")
     assert st.tiles is st.tiles
+
+
+def test_pixels_of_cached_tiles_read_the_cache(spark):
+    """Once the caller cached a planned stack's tiles, ``pixels()`` (and so
+    ``create_views``' pixels view and ``mosaic()``) explodes that cache
+    instead of scanning the sources again; the rows are the scan's."""
+    st = stack(spark, _items(), assets=list(BANDS), chunksize=16).filter_items(F.col("item_idx") < 2)
+    st.tiles.cache()
+    st.tiles.count()
+    try:
+        plan = _plan(st.pixels())
+        per_query = plan.split("InMemoryRelation")[0]
+        assert "InMemoryTableScan" in per_query, plan
+        # the scan kernel reads the plan rows' urls; none are read above the cache
+        assert "url" not in per_query and "MapInPandas run(" not in per_query, plan
+        fresh = stack(spark, _items(), assets=list(BANDS), chunksize=16).filter_items(F.col("item_idx") < 2)
+        assert _rows(st.pixels()) == _rows(fresh.pixels())
+        assert _rows(st.mosaic()) == _rows(fresh.mosaic())
+    finally:
+        st.tiles.unpersist()

@@ -371,7 +371,7 @@ def test_interp_tile_cubic_keys_vs_direct():
     bilinear)."""
     import numpy as np
 
-    from stackstac_spark.operators.warp import _interp_tile
+    from stackstac_spark.operators.warp import _gather, _src_grid
     from stackstac_spark.raster_spec import RasterSpec
 
     rng = np.random.default_rng(7)
@@ -379,7 +379,7 @@ def test_interp_tile_cubic_keys_vs_direct():
     sspec = RasterSpec(32633, (0.0, -12.0, 12.0, 0.0), (1.0, 1.0))
     # dst at 1.5x coarser resolution over the same extent -> fractional taps
     dspec = RasterSpec(32633, (0.0, -12.0, 12.0, 0.0), (1.5, 1.5))
-    got = _interp_tile(src, sspec, (0, 0), dspec, (0, 0, 8, 8), "cubic")
+    got = _gather(src, *_src_grid(sspec, (0, 0), dspec, (0, 0, 8, 8)), "cubic")
 
     def keys_w(t):
         a = -0.5
@@ -408,7 +408,7 @@ def test_interp_tile_cubic_keys_vs_direct():
             assert got[R, C] == pytest.approx(want, rel=1e-12), (R, C)
     # linear surface: cubic is 3rd-order accurate -> exact on v = r + 10c
     lin = np.add.outer(np.arange(12.0), 10.0 * np.arange(12.0))
-    gl = _interp_tile(lin, sspec, (0, 0), dspec, (0, 0, 8, 8), "cubic")
+    gl = _gather(lin, *_src_grid(sspec, (0, 0), dspec, (0, 0, 8, 8)), "cubic")
     for R in range(8):
         for C in range(8):
             if not np.isnan(gl[R, C]):
